@@ -2093,11 +2093,11 @@ def test_int8_serve_reads_dimension_from_manifest(spark, tmp_path_factory, monke
 
 
 @pytest.mark.slow
-def test_filtered_search_refuses_when_graph_family_vanishes(spark, tmp_path_factory, monkeypatch):
+def test_filtered_search_refuses_when_graph_family_vanishes(spark, tmp_path_factory):
     """ADVICE r11: indexed_filtered_search must mirror indexed_graph_search
-    when the re-read manifest lost its 'graph' key (manifest rewritten
-    between the freshness check and the serve read): refuse with
-    index_not_fresh, never silently answer empty."""
+    when the manifest lost its 'graph' key: refuse with index_not_fresh,
+    never silently answer empty. The gate judges and serves from one
+    manifest read, so there is no between-reads window to freeze."""
     import json as _json
 
     import pytest as _pytest
@@ -2116,10 +2116,7 @@ def test_filtered_search_refuses_when_graph_family_vanishes(spark, tmp_path_fact
     manifest = _json.loads(manifest_path.read_text())
     del manifest["graph"]
     manifest_path.write_text(_json.dumps(manifest))
-    # freeze the freshness check at 'fresh' to reproduce the between-reads
-    # race (index_status reads the same file and would otherwise report
-    # stale for a graph-less manifest)
-    monkeypatch.setattr(eng, "index_status", lambda name: "fresh")
+    assert eng.index_status("fr") == "stale"
     with _pytest.raises(EngineError, match="index_not_fresh"):
         eng.indexed_filtered_search(
             "fr", hash_embed("race doc 1", 64), {"tier": "a"}, k=2

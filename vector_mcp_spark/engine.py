@@ -26,11 +26,14 @@ from __future__ import annotations
 import functools
 import hashlib
 import itertools
+import json
+import math
 import os
 import shutil
 import threading
 import time
 import uuid
+from collections import OrderedDict
 from collections.abc import Mapping, Sequence
 from datetime import datetime, timezone
 from pathlib import Path
@@ -53,6 +56,18 @@ from vector_mcp_spark.validation import (
 #: serve-set build; session-scoped, so a plain process-wide counter is safe)
 _SERVE_VIEW_SEQ = itertools.count()
 
+#: beam-serve working sets one engine keeps open (LRU), so the cache is
+#: bounded by this constant, not by the number of collections served. Each
+#: set pins two temp views and two localCheckpointed frames, measured at
+#: 3.6-5.4 KB per collection row (dim 64-384, 4 cores, 8g driver): eight
+#: sets of 100k-row collections would about fill that driver's ~5 GB
+#: storage pool. How many collections real traffic keeps hot is not
+#: known; past the cap every serve rebuilds its set (+1.4-3 s measured).
+_SERVE_SET_CAP = 8
+
+#: row schema every indexed serve answers with, best-first
+_HITS_SCHEMA = "id string, content string, score double"
+
 
 def _physical_name(logical: str) -> str:
     # postgres.py:33-35 — "vm_" + sha256(name)[:24]
@@ -72,6 +87,20 @@ _PART_LEN = 2
 
 def _prefix_of(id_col) -> "F.Column":
     return F.substring(id_col, 1, _PART_LEN)
+
+
+def _dir_fingerprint(path: str | Path) -> str:
+    """Freshness stamp of a parquet tree: sha256 over every data file's
+    relative path and mtime. Every mutation rewrites at least one file, so
+    an index manifest that recorded this stamp is fresh exactly while the
+    tree is untouched."""
+    path = Path(path)
+    if not path.exists():
+        return "empty"
+    stamps = sorted(
+        f"{p.relative_to(path)}:{p.stat().st_mtime_ns}" for p in path.rglob("*.parquet")
+    )
+    return hashlib.sha256("\n".join(stamps).encode()).hexdigest()
 
 
 def _tenant_prefix(tenant: str) -> str:
@@ -154,34 +183,36 @@ class CollectionEngine:
         # through transactional MERGE/DELETE (operators/transactional.py);
         # unset keeps the partition-pruned parquet rewrite path
         self._table_format = transactional_format()
-        # Beam-serve working sets per graph index build: (index root,
-        # manifest mtime_ns, metric) → materialized (nodes, edges). The
-        # mtime key makes any rebuild a miss, and staleness REFUSAL
-        # (index_not_fresh) runs before this cache is consulted, so a
-        # stale index can never be served from here (r13, guide §1.2).
-        self._graph_serve_sets: dict[tuple, tuple] = {}
+        # Beam-serve working sets per graph index build, LRU-bounded by
+        # _SERVE_SET_CAP: (index root, manifest mtime_ns, metric) →
+        # materialized (nodes, edges, views). The mtime key makes any
+        # rebuild a miss, and the freshness gate runs before this cache is
+        # consulted, so a stale index can never be served from here.
+        self._graph_serve_sets: OrderedDict[tuple, tuple] = OrderedDict()
+        self._serve_sets_guard = threading.Lock()
         (self.root / "collections").mkdir(parents=True, exist_ok=True)
 
     def _graph_serve_set(self, index_root: Path, corpus, metric: str):
-        """Materialized (nodes, edges, nodes_view, edges_view) for one
-        graph index build — the in-RAM working set a vector DB keeps open
-        next to its persisted graph, plus the temp-view names the prepared
-        single-query descent SQL references (r14, guide §1/§4: one
-        spark.sql parse per serve instead of ~60 eagerly-analyzed
-        DataFrame transformations). Built once per (build, metric); evicts
-        prior builds of the same root (and drops their views) so a rebuild
-        does not pin dead checkpoint blocks."""
+        """Materialized (nodes, edges, nodes_view, edges_view, bcast_edges)
+        for one graph index build — the in-RAM working set a vector DB
+        keeps open next to its persisted graph, plus the temp-view names
+        the prepared single-query descent SQL references (one spark.sql
+        parse per serve instead of ~60 eagerly-analyzed DataFrame
+        transformations). Built once per (build, metric); a new build
+        evicts the prior builds of the same root, and the least recently
+        served set goes once more than _SERVE_SET_CAP are open."""
         from vector_mcp_spark.operators.graph_ann import hnsw_serve_set
 
         st = (index_root / "manifest.json").stat()
         key = (str(index_root), st.st_mtime_ns, metric)
-        hit = self._graph_serve_sets.get(key)
-        if hit is not None:
-            return hit
-        for old in [k for k in self._graph_serve_sets if k[0] == key[0]]:
-            for view in self._graph_serve_sets[old][2:4]:
-                self.spark.catalog.dropTempView(view)
-            del self._graph_serve_sets[old]
+        with self._serve_sets_guard:
+            hit = self._graph_serve_sets.get(key)
+            if hit is not None:
+                self._graph_serve_sets.move_to_end(key)
+                return hit
+        # older builds of this root only: a racing miss on the same or a
+        # newer build keeps its set (and the views it is about to resolve)
+        self._drop_serve_sets(lambda k: k[0] == key[0] and k[1] < key[1])
         edges = self.spark.read.parquet(str(index_root / "graph"))
         nodes, edges = hnsw_serve_set(
             corpus, edges, id_col="id", emb_col="embedding", metric=metric
@@ -202,8 +233,25 @@ class CollectionEngine:
             limit = 10 * 1024 * 1024
         bcast_edges = 0 <= (nodes.count() + edges.count()) * 64 <= limit
         ss = (nodes, edges, nodes_view, edges_view, bcast_edges)
-        self._graph_serve_sets[key] = ss
-        return ss
+        with self._serve_sets_guard:
+            cached = self._graph_serve_sets.setdefault(key, ss)
+            self._graph_serve_sets.move_to_end(key)
+            overflow = list(self._graph_serve_sets)[:-_SERVE_SET_CAP]
+        if cached is not ss:  # a racing miss inserted first: keep its set
+            for view in (nodes_view, edges_view):
+                self.spark.catalog.dropTempView(view)
+        self._drop_serve_sets(lambda k: k in overflow)
+        return cached
+
+    def _drop_serve_sets(self, match) -> None:
+        """Forget every cached serve set whose key ``match``es and drop its
+        temp views (the checkpointed frames go with their last reference)."""
+        with self._serve_sets_guard:
+            gone = [self._graph_serve_sets.pop(k) for k in list(self._graph_serve_sets)
+                    if match(k)]
+        for ss in gone:
+            for view in ss[2:4]:
+                self.spark.catalog.dropTempView(view)
 
     # -- catalog ------------------------------------------------------------
     #
@@ -708,6 +756,8 @@ class CollectionEngine:
             path = Path(self._table_path(scoped) + suffix)
             if path.exists():
                 shutil.rmtree(path)
+        # the dropped indexes' serve sets (default and named roots alike)
+        self._drop_serve_sets(lambda k: k[0].startswith(self._table_path(scoped) + "_"))
         # orphaned stage dirs from a crashed writer (writer-unique names)
         base = Path(self._table_path(scoped))
         for stale in base.parent.glob(base.name + "_stage-*"):
@@ -887,17 +937,178 @@ class CollectionEngine:
     def _index_root(self, scoped: str) -> Path:
         return Path(self._table_path(scoped) + "_index")
 
-    def _table_fingerprint(self, scoped: str) -> str:
-        table = Path(self._table_path(scoped))
-        if not table.exists():
-            return "empty"
-        stamps = sorted(
-            f"{p.relative_to(table)}:{p.stat().st_mtime_ns}"
-            for p in table.rglob("*.parquet")
-        )
-        import hashlib
+    # -- index lifecycle: one state reader, one gate, one row-family writer --
+    #
+    # Every index family (the default families under <table>_index, each
+    # named vector's graph, each payload index) records the fingerprint of
+    # the tree it was built over in its manifest.json. _manifest_state is
+    # the one reader that turns (manifest, tree) into a status; the vector
+    # serves go through _serve_gate, which reads the manifest ONCE and hands
+    # the checked copy to the serve plan.
 
-        return hashlib.sha256("\n".join(stamps).encode()).hexdigest()
+    @staticmethod
+    def _manifest_state(
+        manifest_path: Path, data: str | Path, valid=None
+    ) -> tuple[str, dict | None]:
+        """('absent' | 'fresh' | 'repaired' | 'stale', manifest) for one
+        index family: fresh while ``data`` still has the fingerprint the
+        build stamped, repaired while it has the one an incremental repair
+        stamped, stale otherwise or when ``valid(manifest)`` rejects the
+        manifest itself. The manifest is returned whatever the status (a
+        repair extends a stale one); only the gate decides what serves."""
+        if not manifest_path.exists():
+            return "absent", None
+        meta = json.loads(manifest_path.read_text())
+        if valid is not None and not valid(meta):
+            return "stale", meta
+        fp = _dir_fingerprint(data)
+        if meta.get("fingerprint") == fp:
+            return "fresh", meta
+        if meta.get("repaired_fingerprint") == fp:
+            return "repaired", meta
+        return "stale", meta
+
+    def _index_state(self, scoped: str) -> tuple[str, dict | None]:
+        """State of the default index families. A manifest predating the
+        graph or IVF-PQ family can't serve the whole search surface, and a
+        :meth:`set_collection_distance` switch changed every score without
+        changing the data: both read stale until a rebuild."""
+        distance = self._locked_distance(scoped)
+        return self._manifest_state(
+            self._index_root(scoped) / "manifest.json",
+            self._table_path(scoped),
+            lambda m: "graph" in m and "ivfpq" in m
+            and (m.get("distance") or "cosine") == distance,
+        )
+
+    @staticmethod
+    def _servable(status: str, required: bool = True) -> bool:
+        """The one freshness rule: a fresh or repaired index serves, nothing
+        else does. A required serve refuses with ``index_not_fresh`` — a
+        stale index is never served silently."""
+        if status in ("fresh", "repaired"):
+            return True
+        if required:
+            raise EngineError("index_not_fresh")
+        return False
+
+    @staticmethod
+    def _query_vector(question_vec, dim: int | None) -> list[float]:
+        """The one query-vector check: numeric, finite, and ``dim`` wide
+        when a width is known. A mis-sized query NULL-pads zip_with and
+        scores every pair NULL; a NaN/Inf element has no SQL literal. Both
+        refuse with the ingest gate's width code instead of serving garbage
+        or reaching the parser."""
+        try:
+            vec = [float(x) for x in question_vec]
+        except (TypeError, ValueError):
+            raise EngineError(
+                "collection_vector_schema_mismatch", detail="query vector must be numeric"
+            ) from None
+        if not all(math.isfinite(x) for x in vec):
+            raise EngineError(
+                "collection_vector_schema_mismatch", detail="query vector has NaN/Inf elements"
+            )
+        if dim is not None and len(vec) != dim:
+            raise EngineError(
+                "collection_vector_schema_mismatch",
+                detail=f"query dimension {len(vec)} != indexed {dim}",
+            )
+        return vec
+
+    def _serve_gate(self, name: str, question_vec=None, family: str | None = None):
+        """The gate in front of every default-family serve: ``_require`` →
+        one manifest read → status → query-vector check → family present.
+        Returns ``(scoped, manifest, query)``; the manifest is the copy the
+        status was judged on, so no serve reads it again.
+
+        Refusal order: a query off the catalog-locked width first, then
+        ``index_not_fresh``, then a query off the width the build recorded
+        (content-only collections lock none). ``family`` names the
+        directory the plan reads; ``"shortlist"`` resolves to the quantized
+        family the build chose, and the sign shortlist never refuses a
+        width — it packs the first 64 dimensions of any query."""
+        scoped = self._require(name)
+        status, manifest = self._index_state(scoped)
+        manifest = manifest or {}
+        if family == "shortlist":
+            family = "signs" if manifest.get("quantization", "sign") == "sign" else "int8q"
+        sized = family != "signs"
+        query = None
+        if question_vec is not None:
+            query = self._query_vector(
+                question_vec, self._locked_dimension(scoped) if sized else None
+            )
+        self._servable(status)
+        if query is not None and sized:
+            width = manifest.get("dimension")
+            pq = manifest.get("ivfpq")
+            if width is None and pq:  # manifests before the width stamp
+                width = pq["m"] * len(pq["codebooks"][0][0])
+            self._query_vector(query, width)
+        if family is not None and not (self._index_root(scoped) / family).exists():
+            raise EngineError("index_not_fresh", detail=f"{family} family missing; rebuild")
+        return scoped, manifest, query
+
+    def _indexable_rows(self, name: str) -> tuple[DataFrame, bool]:
+        """(rows, content_only): the collection in its SERVED
+        representation — rows stored content-only get their vectors from
+        the same embed seam the search path uses."""
+        df = self.read(name)
+        content_only = self.needs_embed(name)
+        if content_only:
+            from vector_mcp_spark.functions.embedder import embed_documents
+
+            df = embed_documents(df, text_col="content", out_col="embedding")
+        return df, content_only
+
+    def _write_row_families(
+        self, root: Path, rows: DataFrame, quantization: str, content_only: bool, mode: str
+    ) -> tuple[DataFrame, DataFrame]:
+        """Write the row-level index families over ``rows``: lexical
+        postings (term-bucket partitioned), the (id, dlen) L1 norms that
+        make them SPLADE-style sparse vectors, the derived vectors of a
+        content-only collection (serving never re-embeds the corpus), the
+        sign or int8 shortlist codes, and the (id, rowhash) sidecar that
+        lets a repair prove growth was append-only. ``mode="overwrite"``
+        (build) replaces every family and removes the ones the config no
+        longer uses; ``"append"`` (repair) extends the families the build
+        wrote and skips any the index predates. Returns (postings, codes)."""
+        from vector_mcp_spark.functions.text import tokens
+        from vector_mcp_spark.operators.lexical import build_postings, term_bucket
+        from vector_mcp_spark.operators.quantize import quantize_int8, sign_pack
+
+        def write(frame: DataFrame, family: str, *partition: str) -> None:
+            if mode == "append" and not (root / family).exists():
+                return
+            writer = frame.write.mode(mode)
+            if partition:
+                writer = writer.partitionBy(*partition)
+            writer.parquet(str(root / family))
+
+        vecs = rows.where(F.col("embedding").isNotNull())
+        postings = build_postings(rows.select("id", "content"), "id", "content").withColumn(
+            "term_bucket", term_bucket("term")
+        )
+        write(postings, "postings", "term_bucket")
+        write(rows.select("id", F.size(tokens(F.col("content"))).alias("dlen")), "doclen")
+        if content_only:
+            write(vecs.select("id", "embedding"), "vectors")
+        if quantization == "sign":
+            shortlist = "signs"
+            codes = sign_pack(vecs, "embedding", "id").select("id", "lo", "hi")
+        else:
+            shortlist = "int8q"
+            codes = quantize_int8(vecs, vec_col="embedding", id_col="id").select("id", "scale", "q")
+        write(codes, shortlist)
+        if mode == "overwrite":
+            unused = {"signs", "int8q"} - {shortlist}
+            if not content_only:
+                unused.add("vectors")  # stored vectors are read from the table
+            for family in unused:
+                shutil.rmtree(root / family, ignore_errors=True)
+        write(rows.select("id", self._row_fingerprint(rows).alias("rowhash")), "ids")
+        return postings, codes
 
     def build_search_index(self, name: str, quantization: str = "sign") -> dict:
         """Materialize the search index families for a collection:
@@ -915,9 +1126,6 @@ class CollectionEngine:
         exact dimension coverage at 8× the sign footprint). Exact re-rank
         over the full vectors follows either way; the choice is recorded
         in the manifest and honored by serve + repair."""
-        from vector_mcp_spark.operators.lexical import build_postings, term_bucket
-        from vector_mcp_spark.operators.quantize import quantize_int8, sign_pack
-
         if quantization not in ("sign", "int8"):
             raise EngineError(
                 "quantization_invalid",
@@ -928,73 +1136,22 @@ class CollectionEngine:
         if distance != "cosine" and quantization == "sign":
             # sign bits keep direction only; dot and l2 need magnitudes —
             # non-cosine collections shortlist from int8 codes (and the
-            # quantization-switch cleanup below removes a stale sign family)
+            # quantization-switch cleanup removes a stale sign family)
             quantization = "int8"
         # the coarse quantizer under the collection metric: l2 collections
         # cluster by Euclidean distance; dot shares the cosine clustering
         # (the standard MIPS compromise — the exact re-rank restores order)
         coarse_metric = "l2" if distance == "l2" else "cosine"
-        df = self.read(name)
-        if self.needs_embed(name):
-            # index the SERVED representation: rows stored content-only get
-            # their vectors from the same embed seam the search path uses
-            from vector_mcp_spark.functions.embedder import embed_documents
-
-            df = embed_documents(df, text_col="content", out_col="embedding")
+        df, content_only = self._indexable_rows(name)
         root = self._index_root(scoped)
-        postings = build_postings(df.select("id", "content"), "id", "content").withColumn(
-            "term_bucket", term_bucket("term")
+        postings, codes = self._write_row_families(
+            root, df, quantization, content_only, "overwrite"
         )
-        postings.write.mode("overwrite").partitionBy("term_bucket").parquet(
-            str(root / "postings")
-        )
-        # named-sparse family: the (id, dlen) L1 norms that turn the tf
-        # postings into SPLADE-style sparse vectors (qdrant named sparse
-        # vectors served next to the dense families) — one tokenizer pass,
-        # serve time never re-tokenizes
-        from vector_mcp_spark.functions.text import tokens as _tokens
-
-        df.select("id", F.size(_tokens(F.col("content"))).alias("dlen")).write.mode(
-            "overwrite"
-        ).parquet(str(root / "doclen"))
-        vec_rows = df.where(F.col("embedding").isNotNull())
-        if self.needs_embed(name):
-            # content-only collections: persist the derived vectors so the
-            # serve paths never re-embed the corpus inside a query plan
-            # (VERDICT r11 watch item 2) — the embed seam runs ONCE, here
-            vec_rows.select("id", "embedding").write.mode("overwrite").parquet(
-                str(root / "vectors")
-            )
-        else:
-            # stored-vector collections read embeddings from the table; a
-            # leftover family from a content-only past would shadow them
-            shutil.rmtree(root / "vectors", ignore_errors=True)
-        if quantization == "sign":
-            signs = sign_pack(vec_rows, "embedding", "id")
-            signs.select("id", "lo", "hi").write.mode("overwrite").parquet(
-                str(root / "signs")
-            )
-            shutil.rmtree(root / "int8q", ignore_errors=True)
-        else:
-            signs = quantize_int8(vec_rows, vec_col="embedding", id_col="id")
-            signs.select("id", "scale", "q").write.mode("overwrite").parquet(
-                str(root / "int8q")
-            )
-            shutil.rmtree(root / "signs", ignore_errors=True)
-        # a rebuild that switches quantization must not leave the previous
-        # family's table behind: it would never be read (the manifest pins
-        # the active family) but would silently bloat the sidecar
-        # membership + per-row change sidecar: lets repair_search_index
-        # prove the growth was append-only (old rows present AND unchanged
-        # in their SERVED representation) without any full re-index
-        df.select("id", self._row_fingerprint(df).alias("rowhash")).write.mode(
-            "overwrite"
-        ).parquet(str(root / "ids"))
         # counts come from the source plans, not a read-back: an EMPTY
         # collection writes only _SUCCESS markers, which parquet cannot
         # re-read without a schema
         n_terms = postings.select("term").distinct().count()
-        n_vectors = signs.count()
+        n_vectors = codes.count()
         # third index family: the HNSW-style layered graph (the engine-side
         # analogue of pgvector `USING hnsw`, postgres.py:182-188) — built
         # over the same ivf coarse quantizer the graph operator uses, and
@@ -1064,9 +1221,9 @@ class CollectionEngine:
                 metric=distance,
             )
             edges.write.mode("overwrite").parquet(str(root / "graph"))
-        fp = self._table_fingerprint(scoped)
+        fp = _dir_fingerprint(self._table_path(scoped))
         (root / "manifest.json").write_text(
-            __import__("json").dumps(
+            json.dumps(
                 {
                     "fingerprint": fp,
                     "n_terms": n_terms,
@@ -1076,7 +1233,7 @@ class CollectionEngine:
                     "quantization": quantization,
                     "distance": distance,
                     # content-only collections never lock a dimension in the
-                    # catalog; serve paths fall back to this for the
+                    # catalog; the serve gate falls back to this for the
                     # mis-sized-query refusal
                     "dimension": dim_indexed,
                 }
@@ -1088,39 +1245,18 @@ class CollectionEngine:
         """'absent' | 'fresh' | 'repaired' | 'stale' — stale when the table
         changed after the index was built (any mutation rewrites partition
         files); 'repaired' when the change was covered by an incremental
-        :meth:`repair_search_index` instead of a full rebuild (all three
+        :meth:`repair_search_index` instead of a full rebuild (all
         families serve, but a rebuild restores the build-quality graph)."""
-        scoped = self._require(name)
-        manifest = self._index_root(scoped) / "manifest.json"
-        if not manifest.exists():
-            return "absent"
-        import json
-
-        meta = json.loads(manifest.read_text())
-        if "graph" not in meta or "ivfpq" not in meta:
-            # a pre-graph/pre-ivfpq-family index can't serve its whole
-            # search surface — report stale so status-polling automation
-            # rebuilds it (both families are written by every
-            # build_search_index since r9/r11)
-            return "stale"
-        if (meta.get("distance") or "cosine") != self._locked_distance(scoped):
-            # set_collection_distance switched the geometry out from under
-            # the built families — the data didn't change but every score
-            # did; refuse to serve until a rebuild re-derives the index
-            return "stale"
-        fp = self._table_fingerprint(scoped)
-        if meta["fingerprint"] == fp:
-            return "fresh"
-        if meta.get("repaired_fingerprint") == fp:
-            return "repaired"
-        return "stale"
+        return self._index_state(self._require(name))[0]
 
     @_serialized_mutation
     def repair_search_index(self, name: str) -> dict:
-        """Incrementally extend all three index families after APPEND-ONLY
+        """Incrementally extend the index families after APPEND-ONLY
         growth — the alternative to a full :meth:`build_search_index` when a
-        batch landed on an indexed collection: new postings and sign rows
-        are appended, and the graph gets the batch HNSW-insert repair
+        batch landed on an indexed collection: the batch's row-level
+        families are appended (the same writer the build uses), its
+        IVF-PQ codes are encoded against the frozen centroids, and the
+        graph gets the batch HNSW-insert repair
         (:func:`~vector_mcp_spark.operators.graph_ann.hnsw_repair` — layer
         draws + beam-searched top-M links against the frozen graph).
 
@@ -1140,22 +1276,16 @@ class CollectionEngine:
         Serialized with the table mutations: the repair reads the table and
         stamps the covering fingerprint, so a mutation interleaving between
         the two would stamp coverage it never indexed."""
-        import json
-
         from vector_mcp_spark.operators.graph_ann import hnsw_repair
-        from vector_mcp_spark.operators.lexical import build_postings, term_bucket
-        from vector_mcp_spark.operators.quantize import sign_pack
 
         scoped = self._require(name)
         root = self._index_root(scoped)
-        manifest_path = root / "manifest.json"
-        if not manifest_path.exists():
+        status, manifest = self._index_state(scoped)
+        if manifest is None:
             raise EngineError(
                 "index_not_fresh", detail="no index to repair — build_search_index first"
             )
-        manifest = json.loads(manifest_path.read_text())
-        status = self.index_status(name)
-        if status in ("fresh", "repaired"):
+        if self._servable(status, required=False):
             return {"repaired": 0, "n_vectors": manifest.get("n_vectors", 0)}
         graph_meta = manifest.get("graph") or {}
         if "graph" not in manifest or "ivfpq" not in manifest or not (root / "ids").exists():
@@ -1176,11 +1306,7 @@ class CollectionEngine:
                 "index_repair_requires_rebuild",
                 detail="collection had <2 vectors at build; rebuild",
             )
-        df = self.read(name)
-        if self.needs_embed(name):
-            from vector_mcp_spark.functions.embedder import embed_documents
-
-            df = embed_documents(df, text_col="content", out_col="embedding")
+        df, content_only = self._indexable_rows(name)
         df = df.localCheckpoint(eager=True)  # feeds membership + both phases
         indexed = self.spark.read.parquet(str(root / "ids"))
         removed = indexed.join(df.select("id"), "id", "left_anti").count()
@@ -1205,40 +1331,11 @@ class CollectionEngine:
         if n_new == 0:
             # logically identical table in rewritten files (e.g. a no-op
             # upsert): stamp coverage, nothing to index
-            manifest["repaired_fingerprint"] = self._table_fingerprint(scoped)
-            manifest_path.write_text(json.dumps(manifest))
+            manifest["repaired_fingerprint"] = _dir_fingerprint(self._table_path(scoped))
+            (root / "manifest.json").write_text(json.dumps(manifest))
             return {"repaired": 0, "n_vectors": manifest.get("n_vectors", 0)}
 
-        new_postings = build_postings(new.select("id", "content"), "id", "content").withColumn(
-            "term_bucket", term_bucket("term")
-        )
-        new_postings.write.mode("append").partitionBy("term_bucket").parquet(
-            str(root / "postings")
-        )
-        if (root / "doclen").exists():
-            # sparse-family twin of the postings append; a pre-family index
-            # skips it (indexed_sparse_search refuses until a rebuild, so a
-            # partial doclen table can never serve)
-            from vector_mcp_spark.functions.text import tokens as _tokens
-
-            new.select("id", F.size(_tokens(F.col("content"))).alias("dlen")).write.mode(
-                "append"
-            ).parquet(str(root / "doclen"))
-        new_emb = new.where(F.col("embedding").isNotNull())
-        if manifest.get("quantization", "sign") == "sign":
-            sign_pack(new_emb, "embedding", "id").select("id", "lo", "hi").write.mode(
-                "append"
-            ).parquet(str(root / "signs"))
-        else:
-            from vector_mcp_spark.operators.quantize import quantize_int8
-
-            quantize_int8(new_emb, vec_col="embedding", id_col="id").select(
-                "id", "scale", "q"
-            ).write.mode("append").parquet(str(root / "int8q"))
-        if self.needs_embed(name) and (root / "vectors").exists():
-            new_emb.select("id", "embedding").write.mode("append").parquet(
-                str(root / "vectors")
-            )
+        new_emb = new.where(F.col("embedding").isNotNull()).select("id", "embedding")
         n_new_vecs = new_emb.count()
         if n_new_vecs and manifest.get("ivfpq"):
             # IVF-PQ family: encode the batch against the FROZEN coarse
@@ -1250,7 +1347,7 @@ class CollectionEngine:
             pq_meta = manifest["ivfpq"]
             new_codes = pq_encode_with(
                 assign_clusters(
-                    new_emb.select("id", "embedding"), pq_meta["centroids"],
+                    new_emb, pq_meta["centroids"],
                     metric="l2" if distance == "l2" else "cosine",
                 ),
                 pq_meta["codebooks"],
@@ -1265,7 +1362,7 @@ class CollectionEngine:
                 .select("id", "embedding")
             )
             new_edges, graph_meta = hnsw_repair(
-                new_emb.select("id", "embedding"),
+                new_emb,
                 old_vecs,
                 self.spark.read.parquet(str(root / "graph")),
                 graph_meta["entry"],
@@ -1274,9 +1371,11 @@ class CollectionEngine:
                 metric=distance,
             )
             new_edges.write.mode("append").parquet(str(root / "graph"))
-        fingerprinted.join(indexed.select("id"), "id", "left_anti").write.mode(
-            "append"
-        ).parquet(str(root / "ids"))
+        # the ids sidecar goes last inside the writer: rows count as indexed
+        # only once every other family holds them
+        self._write_row_families(
+            root, new, manifest.get("quantization", "sign"), content_only, "append"
+        )
         # n_terms is a distinct over the merged postings — a linear scan of
         # the postings index (its OUTPUT is vocabulary-bounded, the scan is
         # not); repair only runs on collections that had a graph, so the
@@ -1295,10 +1394,10 @@ class CollectionEngine:
                 "n_terms": n_terms,
                 "n_vectors": int(manifest.get("n_vectors", 0)) + n_new_vecs,
                 "graph": graph_meta,
-                "repaired_fingerprint": self._table_fingerprint(scoped),
+                "repaired_fingerprint": _dir_fingerprint(self._table_path(scoped)),
             }
         )
-        manifest_path.write_text(json.dumps(manifest))
+        (root / "manifest.json").write_text(json.dumps(manifest))
         return {
             "repaired": n_new,
             "n_vectors": int(manifest["n_vectors"]),
@@ -1310,7 +1409,7 @@ class CollectionEngine:
         indexed search ranks and re-ranks over. Stored-vector collections
         read straight from the table; content-only collections read the
         ``vectors`` family the index build persisted (build/repair keep it
-        covering, and every caller already refused on a stale index), so
+        covering, and every caller already passed the freshness gate), so
         serving never re-embeds the corpus inside a query plan. Indexes
         built before the family existed fall back to the deterministic
         embed seam."""
@@ -1334,6 +1433,45 @@ class CollectionEngine:
             return [score.asc_nulls_last(), tie.asc()]
         return [score.desc(), tie.asc()]
 
+    def _no_hits(self) -> DataFrame:
+        return self.spark.createDataFrame([], _HITS_SCHEMA)
+
+    def _ranked(self, docs: DataFrame, hits: DataFrame, metric: str, score=None) -> DataFrame:
+        """The one serve finish: broadcast the k-bounded hit set into the
+        document frame, project (id, content, score) — ``score`` defaults
+        to the hits' own column — and rank best-first under ``metric``."""
+        return (
+            docs.join(F.broadcast(hits), "id")
+            .select("id", "content", "score" if score is None else score.alias("score"))
+            .orderBy(*self._metric_order(metric, F.col("score"), F.col("id")))
+        )
+
+    def _beam_hits(
+        self, index_root: Path, manifest: dict, corpus: DataFrame, query: list[float],
+        k: int, ef: int, metric: str,
+    ) -> "DataFrame | None":
+        """(id, score) beam-descent hits from one graph family — the default
+        index or a named vector's — or None when the build recorded no
+        entry (< 2 vectors: nothing to traverse). The prepared single-query
+        descent is one spark.sql text over the cached serve-set views,
+        identical to ``ann_hnsw_topk(exclude_self=False)``: the query is not
+        a corpus row, so a document whose id equals the synthetic query id
+        must still be returnable."""
+        from vector_mcp_spark.operators.graph_ann import ann_hnsw_prepared_sql
+
+        entry = (manifest.get("graph") or {}).get("entry")
+        if entry is None:
+            return None
+        _, _, nodes_view, edges_view, bcast_edges = self._graph_serve_set(
+            index_root, corpus, metric
+        )
+        return self.spark.sql(
+            ann_hnsw_prepared_sql(
+                nodes_view, edges_view, entry, query, k=k, ef=ef, metric=metric,
+                broadcast_edges=bcast_edges,
+            )
+        ).select(F.col("neighbor_id").alias("id"), "score")
+
     def indexed_lexical_search(self, name: str, query: str, k: int = 5) -> DataFrame:
         """Serve a lexical query from the materialized index; refuses with
         ``index_not_fresh`` when the index is absent or stale (never serve
@@ -1341,13 +1479,10 @@ class CollectionEngine:
         ``repaired`` index serves."""
         from vector_mcp_spark.operators.lexical import indexed_lexical_topk
 
-        scoped = self._require(name)
-        if self.index_status(name) not in ("fresh", "repaired"):
-            raise EngineError("index_not_fresh")
+        scoped, _, _ = self._serve_gate(name, family="postings")
         return indexed_lexical_topk(
             self.spark, str(self._index_root(scoped) / "postings"), query, k
         )
-
 
     # -- named multi-vector collections (qdrant named-vectors parity) -------
     #
@@ -1398,13 +1533,9 @@ class CollectionEngine:
         cfg_path = self._named_root(scoped) / "config.json"
         if not cfg_path.exists():
             return {}
-        import json
-
         return json.loads(cfg_path.read_text())
 
     def _named_cfg(self, scoped: str, vector_name: str) -> dict:
-        import json
-
         cfg_path = self._named_root(scoped) / "config.json"
         cfg = json.loads(cfg_path.read_text()) if cfg_path.exists() else {}
         if vector_name not in cfg:
@@ -1462,15 +1593,6 @@ class CollectionEngine:
         merged.write.mode("overwrite").parquet(str(data))
         return len(rows)
 
-    def _named_fingerprint(self, scoped: str, vector_name: str) -> str:
-        data = self._named_root(scoped) / vector_name / "data"
-        if not data.exists():
-            return "empty"
-        stamps = sorted(
-            f"{p.relative_to(data)}:{p.stat().st_mtime_ns}" for p in data.rglob("*.parquet")
-        )
-        return hashlib.sha256("\n".join(stamps).encode()).hexdigest()
-
     def build_named_vector_index(self, name: str, vector_name: str) -> dict:
         """Materialize the name's graph index family under ITS distance
         (the per-name analogue of the default embedding's graph family):
@@ -1478,8 +1600,6 @@ class CollectionEngine:
         per-name manifest stamped with the sidecar fingerprint. Collections
         with < 2 vectors under the name record an entry-less graph (served
         queries answer empty, same as the default family)."""
-        import json
-
         from vector_mcp_spark.operators.graph_ann import hnsw_build
         from vector_mcp_spark.operators.similarity import ivf_build
 
@@ -1514,7 +1634,7 @@ class CollectionEngine:
         (root / "manifest.json").write_text(
             json.dumps(
                 {
-                    "fingerprint": self._named_fingerprint(scoped, vector_name),
+                    "fingerprint": _dir_fingerprint(data),
                     "n_vectors": n,
                     "graph": graph_meta,
                     "distance": cfg["distance"],
@@ -1523,20 +1643,16 @@ class CollectionEngine:
         )
         return {"n_vectors": n}
 
+    def _named_state(self, scoped: str, vector_name: str) -> tuple[str, dict | None]:
+        root = self._named_root(scoped) / vector_name
+        return self._manifest_state(root / "manifest.json", root / "data")
+
     def named_vector_index_status(self, name: str, vector_name: str) -> str:
+        """'absent' | 'fresh' | 'stale' for one name's graph family (a
+        named family has no incremental repair; a re-put needs a rebuild)."""
         scoped = self._require(name)
         self._named_cfg(scoped, vector_name)
-        import json
-
-        mpath = self._named_root(scoped) / vector_name / "manifest.json"
-        if not mpath.exists():
-            return "absent"
-        meta = json.loads(mpath.read_text())
-        return (
-            "fresh"
-            if meta.get("fingerprint") == self._named_fingerprint(scoped, vector_name)
-            else "stale"
-        )
+        return self._named_state(scoped, vector_name)[0]
 
     def named_vector_search(
         self,
@@ -1553,85 +1669,43 @@ class CollectionEngine:
         family serves when built and fresh, the exact scan otherwise;
         ``indexed=True`` requires a fresh index (``index_not_fresh``);
         ``indexed=False`` forces the exact scan."""
-        import json
-
-        from vector_mcp_spark.operators.graph_ann import ann_hnsw_prepared_sql
         from vector_mcp_spark.operators.semantic import semantic_topk
 
         scoped = self._require(name)
         cfg = self._named_cfg(scoped, vector_name)
-        question_vec = [float(x) for x in question_vec]
-        dim = cfg.get("dimension")
-        if dim is not None and len(question_vec) != dim:
-            raise EngineError(
-                "collection_vector_schema_mismatch",
-                detail=f"query dimension {len(question_vec)} != locked {dim}",
-            )
+        query = self._query_vector(question_vec, cfg.get("dimension"))
         metric = cfg["distance"]
         root = self._named_root(scoped) / vector_name
-        data = root / "data"
-        empty = self.spark.createDataFrame([], "id string, content string, score double")
-        if not (data / "_SUCCESS").exists():
-            return empty
-        status = self.named_vector_index_status(name, vector_name)
-        use_index = status == "fresh" if indexed is None else indexed
-        if indexed and status != "fresh":
-            raise EngineError("index_not_fresh")
-        vecs = self.spark.read.parquet(str(data))
-        if use_index and indexed is None:
-            meta_peek = json.loads((root / "manifest.json").read_text())
-            if (meta_peek.get("graph") or {}).get("entry") is None:
-                # <2 vectors at build recorded an entry-less graph; the
-                # auto router's job is the best serving route, and here
-                # the exact scan answers while the beam cannot
-                use_index = False
-        if not use_index:
+        if not (root / "data" / "_SUCCESS").exists():
+            return self._no_hits()
+        status, manifest = self._named_state(scoped, vector_name)
+        fresh = self._servable(status, required=bool(indexed))
+        vecs = self.spark.read.parquet(str(root / "data"))
+        # the auto router picks the best serving route: an entry-less graph
+        # (< 2 vectors at build) cannot answer what the exact scan can
+        beam = fresh and (manifest.get("graph") or {}).get("entry") is not None
+        if indexed is False or (indexed is None and not beam):
             joined = self.read(name).select("id", "content").join(
                 vecs.select("id", F.col("vector").alias("_nv")), "id"
             )
             return semantic_topk(
-                joined, question_vec, k, id_col="id",
+                joined, query, k, id_col="id",
                 emb_col="_nv", payload_cols=("content",), metric=metric,
             ).select("id", "content", "score")
-        meta = json.loads((root / "manifest.json").read_text())
-        if (meta.get("graph") or {}).get("entry") is None:
-            return empty
         corpus = vecs.select("id", F.col("vector").alias("embedding"))
-        # prepared single-query descent over the cached serve-set views —
-        # bit-identical to the ann_hnsw_topk(exclude_self=False) path
-        # without the per-serve DataFrame analysis cost (r14, guide §1/§4)
-        _, _, nodes_view, edges_view, bcast_edges = self._graph_serve_set(
-            root, corpus, metric
-        )
-        hits = self.spark.sql(
-            ann_hnsw_prepared_sql(
-                nodes_view, edges_view, meta["graph"]["entry"], question_vec,
-                k=k, ef=ef, metric=metric, broadcast_edges=bcast_edges,
-            )
-        ).select(F.col("neighbor_id").alias("id"), "score")
-        return (
-            self.read(name)
-            .join(F.broadcast(hits), "id")
-            .select("id", "content", "score")
-            .orderBy(*self._metric_order(metric, F.col("score"), F.col("id")))
-        )
+        hits = self._beam_hits(root, manifest, corpus, query, k, ef, metric)
+        return self._no_hits() if hits is None else self._ranked(self.read(name), hits, metric)
 
     def _indexed_sparse_hits(self, scoped: str, query_weights, k: int) -> DataFrame:
         """(id, score) sparse leg from the persisted named-sparse family —
         postings bucket-pruned to the query's terms (partition pruning at
         the scan), L1 norms from the doclen table; nothing re-tokenizes."""
-        import hashlib as _hashlib
-
         from vector_mcp_spark.operators.vecapi import indexed_sparse_dot_topk
 
         root = self._index_root(scoped)
-        if not (root / "doclen").exists():
-            raise EngineError(
-                "index_not_fresh", detail="sparse family missing; rebuild"
-            )
         buckets = sorted(
             {
-                _hashlib.sha256(str(t).casefold().encode("utf-8")).hexdigest()[:2]
+                hashlib.sha256(str(t).casefold().encode("utf-8")).hexdigest()[:2]
                 for t, _ in query_weights
             }
         )
@@ -1646,15 +1720,9 @@ class CollectionEngine:
         persisted named-sparse family — the qdrant named-sparse-vector
         search next to the dense index families. Same staleness contract
         as every indexed search. Returns (id, content, score) best-first."""
-        scoped = self._require(name)
-        if self.index_status(name) not in ("fresh", "repaired"):
-            raise EngineError("index_not_fresh")
-        hits = self._indexed_sparse_hits(scoped, query_weights, k)
-        return (
-            self.read(name)
-            .join(F.broadcast(hits), "id")
-            .select("id", "content", "score")
-            .orderBy(F.col("score").desc(), F.col("id").asc())
+        scoped, _, _ = self._serve_gate(name, family="doclen")
+        return self._ranked(
+            self.read(name), self._indexed_sparse_hits(scoped, query_weights, k), "dot"
         )
 
     def indexed_sparse_dense_search(
@@ -1670,21 +1738,23 @@ class CollectionEngine:
         leg_k: int | None = None,
     ) -> DataFrame:
         """Sparse+dense hybrid served END TO END from the engine's
-        persisted index families: the dense leg beam-descends the graph
-        family under the collection's distance config, the sparse leg dots
-        the named-sparse postings, and weighted RRF fuses ≤ leg-k rows per
-        side (the qdrant named-vectors + ``Fusion.RRF`` composition the
-        suite's ``hybrid_sparse_dense`` entry oracles at corpus level)."""
+        persisted index families behind ONE pass of the gate: the dense
+        leg beam-descends the graph family under the collection's distance
+        config, the sparse leg dots the named-sparse postings, and weighted
+        RRF fuses ≤ leg-k rows per side (the qdrant named-vectors +
+        ``Fusion.RRF`` composition the suite's ``hybrid_sparse_dense``
+        entry oracles at corpus level)."""
         from vector_mcp_spark.operators.hybrid import rrf_fuse
 
-        scoped = self._require(name)
-        if self.index_status(name) not in ("fresh", "repaired"):
-            raise EngineError("index_not_fresh")
+        scoped, manifest, query = self._serve_gate(name, question_vec, family="doclen")
+        metric = manifest.get("distance") or "cosine"
         leg = int(leg_k or k)
-        dense = self.indexed_graph_search(name, question_vec, k=leg, ef=ef).select(
-            "id", "score"
-        )
-        if self._locked_distance(scoped) == "l2":
+        docs = self._served_embeddings_df(name, scoped)
+        corpus = docs.where(F.col("embedding").isNotNull()).select("id", "embedding")
+        dense = self._beam_hits(self._index_root(scoped), manifest, corpus, query, leg, ef, metric)
+        if dense is None:
+            dense = self._no_hits().select("id", "score")
+        if metric == "l2":
             # RRF is rank-based; rrf_fuse ranks legs score-DESC, so flip the
             # ascending-better l2 distances into a descending-better key
             dense = dense.withColumn("score", -F.col("score"))
@@ -1692,12 +1762,7 @@ class CollectionEngine:
         fused = rrf_fuse(
             [(dense, w_dense), (sparse, w_sparse)], k, rrf_k=rrf_k, id_col="id"
         )
-        return (
-            self.read(name)
-            .join(F.broadcast(fused), "id")
-            .select("id", "content", "score")
-            .orderBy(F.col("score").desc(), F.col("id").asc())
-        )
+        return self._ranked(self.read(name), fused, "dot")
 
     def indexed_semantic_search(
         self, name: str, question_vec, k: int = 5, shortlist: int = 100
@@ -1712,11 +1777,10 @@ class CollectionEngine:
         The sign packing covers the FIRST 64 dimensions on both the index
         and the query path (shorter vectors zero-pad, extra dims don't
         contribute to the shortlist); the int8 codes cover the full
-        dimension. The exact-cosine re-rank always uses the full vectors,
-        so recall degrades gracefully — it never errors — for dimensions
-        other than 64 under sign quantization."""
-        import json
-
+        dimension, so the gate refuses a mis-sized query for them. The
+        exact-cosine re-rank always uses the full vectors, so under sign
+        quantization recall degrades gracefully — it never errors — for
+        dimensions other than 64."""
         from vector_mcp_spark.functions.vector import (
             cosine_similarity,
             dot,
@@ -1725,21 +1789,19 @@ class CollectionEngine:
         )
         from vector_mcp_spark.operators.quantize import dequantize_expr, sign_pack_py
 
-        scoped = self._require(name)
-        if self.index_status(name) not in ("fresh", "repaired"):
-            raise EngineError("index_not_fresh")
-        manifest = json.loads((self._index_root(scoped) / "manifest.json").read_text())
+        scoped, manifest, query = self._serve_gate(name, question_vec, family="shortlist")
         metric = manifest.get("distance") or "cosine"
-        if metric != "cosine" and manifest.get("quantization", "sign") == "sign":
-            # unreachable through build_search_index (non-cosine builds
-            # force int8 — sign bits drop the magnitudes dot/l2 need), but
-            # a hand-edited manifest must refuse, not serve wrong geometry
-            raise EngineError(
-                "index_not_fresh",
-                detail="sign shortlist is cosine-only; rebuild under int8",
-            )
         if manifest.get("quantization", "sign") == "sign":
-            qlo, qhi = sign_pack_py(list(question_vec))
+            if metric != "cosine":
+                # unreachable through build_search_index (non-cosine builds
+                # force int8 — sign bits drop the magnitudes dot/l2 need),
+                # but a hand-edited manifest must refuse, not serve wrong
+                # geometry
+                raise EngineError(
+                    "index_not_fresh",
+                    detail="sign shortlist is cosine-only; rebuild under int8",
+                )
+            qlo, qhi = sign_pack_py(query)
             signs = self.spark.read.parquet(str(self._index_root(scoped) / "signs"))
             ham = F.bit_count(F.col("lo").bitwiseXOR(F.lit(qlo))) + F.bit_count(
                 F.col("hi").bitwiseXOR(F.lit(qhi))
@@ -1751,22 +1813,7 @@ class CollectionEngine:
             )
         else:
             codes = self.spark.read.parquet(str(self._index_root(scoped) / "int8q"))
-            # int8 covers the FULL dimension, so a mis-sized query makes
-            # every approximate cosine NULL and the isNotNull filter would
-            # silently answer empty (ADVICE r11) — refuse like the graph /
-            # IVF-PQ families instead. Content-only collections never lock
-            # a dimension, so fall back to the manifest's recorded width
-            # (stamped at build; VERDICT r12 item 2 — never a per-query
-            # Spark job just to learn the code width).
-            dim = self._locked_dimension(scoped)
-            if dim is None and manifest.get("dimension") is not None:
-                dim = int(manifest["dimension"])
-            if dim is not None and len(question_vec) != dim:
-                raise EngineError(
-                    "collection_vector_schema_mismatch",
-                    detail=f"query dimension {len(question_vec)} != indexed {dim}",
-                )
-            qarr = F.array(*[F.lit(float(x)) for x in question_vec])
+            qarr = F.array(*[F.lit(x) for x in query])
             deq = dequantize_expr("q", "scale")
             if metric == "cosine":
                 approx = cosine_similarity(deq, qarr)
@@ -1782,91 +1829,31 @@ class CollectionEngine:
                 .drop("_approx")
             )
         df = self._served_embeddings_df(name, scoped)
-        qv = F.array(*[F.lit(float(x)) for x in question_vec])
+        qv = F.array(*[F.lit(x) for x in query])
         if metric == "cosine":
             sim = dot(F.col("embedding"), qv) / (l2_norm(F.col("embedding")) * l2_norm(qv))
         elif metric == "dot":
             sim = dot(F.col("embedding"), qv)
         else:
             sim = l2_distance(F.col("embedding"), qv)
-        return (
-            df.join(F.broadcast(short), "id")
-            .select("id", "content", F.round(sim, 6).alias("score"))
-            .orderBy(*self._metric_order(metric, F.col("score"), F.col("id")))
-            .limit(k)
-        )
+        return self._ranked(df, short, metric, F.round(sim, 6)).limit(k)
 
     def indexed_graph_search(
         self, name: str, question_vec, k: int = 5, ef: int = 48
     ) -> DataFrame:
         """Serve a vector query from the layered HNSW-style graph index
         (operators/graph_ann.py): beam-descend the persisted edge table
-        from the index's entry point, exact-cosine re-rank the final beam.
-        Refuses when the index is absent or stale — same contract as the
-        postings and sign-bit families. Collections with < 2 vectors have
-        no graph; the query answers empty (nothing to traverse)."""
-        import json
-
-        from vector_mcp_spark.operators.graph_ann import ann_hnsw_prepared_sql
-
-        scoped = self._require(name)
-        question_vec = [float(x) for x in question_vec]
-        dim = self._locked_dimension(scoped)
-        if dim is not None and len(question_vec) != dim:
-            # zip_with against a shorter/longer query pads with NULL, making
-            # every cosine NULL — the beam and top-k would return k arbitrary
-            # rows with NULL scores instead of an error (ADVICE r9). The
-            # sign-bit path degrades gracefully by construction; this one
-            # cannot, so refuse with the same stable code the ingest gate
-            # uses for width violations.
-            raise EngineError(
-                "collection_vector_schema_mismatch",
-                detail=f"query dimension {len(question_vec)} != locked {dim}",
-            )
-        if self.index_status(name) not in ("fresh", "repaired"):
-            raise EngineError("index_not_fresh")
-        manifest = json.loads((self._index_root(scoped) / "manifest.json").read_text())
-        if "graph" not in manifest:
-            # normally unreachable — index_status already reports 'stale'
-            # for a pre-graph manifest — but the manifest is re-read here,
-            # so this guards the race where it is rewritten between the two
-            # reads; refusing beats serving silently empty results
-            raise EngineError("index_not_fresh", detail="graph family missing; rebuild")
-        if dim is None and manifest.get("dimension") is not None:
-            # content-only collections lock nothing in the catalog, but the
-            # index recorded its width at build — a mis-sized query would
-            # otherwise score every pair NULL and answer garbage/empty
-            if len(question_vec) != int(manifest["dimension"]):
-                raise EngineError(
-                    "collection_vector_schema_mismatch",
-                    detail=f"query dimension {len(question_vec)} != indexed {manifest['dimension']}",
-                )
-        meta = manifest.get("graph") or {}
-        df = self._served_embeddings_df(name, scoped)
-        if meta.get("entry") is None:
-            return self.spark.createDataFrame([], "id string, content string, score double")
-        corpus = df.where(F.col("embedding").isNotNull()).select("id", "embedding")
+        from the index's entry point, exact re-rank the final beam under
+        the collection's distance. Refuses when the index is absent or
+        stale — same contract as the postings and shortlist families.
+        Collections with < 2 vectors have no graph; the query answers empty
+        (nothing to traverse)."""
+        scoped, manifest, query = self._serve_gate(name, question_vec)
         metric = manifest.get("distance") or "cosine"
-        # prepared single-query descent: one spark.sql text over the cached
-        # serve-set views — identical joins/folds/ordering to ann_hnsw_topk
-        # with exclude_self=False (the query is not a corpus row; a document
-        # whose id happens to equal the synthetic query id must still be
-        # returnable), without the ~60 eagerly-analyzed DataFrame steps or
-        # the per-serve query-checkpoint job (r14, guide §1/§4)
-        _, _, nodes_view, edges_view, bcast_edges = self._graph_serve_set(
-            self._index_root(scoped), corpus, metric
-        )
-        hits = self.spark.sql(
-            ann_hnsw_prepared_sql(
-                nodes_view, edges_view, meta["entry"], question_vec, k=k,
-                ef=ef, metric=metric, broadcast_edges=bcast_edges,
-            )
-        ).select(F.col("neighbor_id").alias("id"), "score")
-        return (
-            df.join(F.broadcast(hits), "id")
-            .select("id", "content", "score")
-            .orderBy(*self._metric_order(metric, F.col("score"), F.col("id")))
-        )
+        df = self._served_embeddings_df(name, scoped)
+        corpus = df.where(F.col("embedding").isNotNull()).select("id", "embedding")
+        hits = self._beam_hits(self._index_root(scoped), manifest, corpus, query, k, ef, metric)
+        return self._no_hits() if hits is None else self._ranked(df, hits, metric)
 
     def indexed_ivfpq_search(
         self, name: str, question_vec, k: int = 5, nprobe: int = 4, shortlist: int = 50
@@ -1876,45 +1863,17 @@ class CollectionEngine:
         engine's IVF-PQ index, ``epistemic_graph.py:5-9``): coarse probe
         over the manifest's centroid table → ADC shortlist over the probed
         clusters' code partitions (4 B/vector reads, partition-pruned) →
-        exact-cosine re-rank of ``shortlist`` rows. Refuses with
+        exact re-rank of ``shortlist`` rows. Refuses with
         ``index_not_fresh`` when the index is absent, stale, or predates
-        the IVF-PQ family — same contract as the other three families.
+        the IVF-PQ family — same contract as the other families.
         Collections with < 2 vectors at build have no codes; the query
         answers empty."""
-        import json
-
         from vector_mcp_spark.operators.pq import ann_ivf_adc_rerank_topk
 
-        scoped = self._require(name)
-        question_vec = [float(x) for x in question_vec]
-        dim = self._locked_dimension(scoped)
-        if dim is not None and len(question_vec) != dim:
-            # same refusal as indexed_graph_search: a mis-sized query would
-            # silently mis-probe (short zip folds), not error
-            raise EngineError(
-                "collection_vector_schema_mismatch",
-                detail=f"query dimension {len(question_vec)} != locked {dim}",
-            )
-        if self.index_status(name) not in ("fresh", "repaired"):
-            raise EngineError("index_not_fresh")
-        manifest = json.loads((self._index_root(scoped) / "manifest.json").read_text())
-        if "ivfpq" not in manifest:
-            # guards the manifest-rewritten-between-reads race, like the
-            # graph-family re-check in indexed_graph_search
-            raise EngineError("index_not_fresh", detail="ivfpq family missing; rebuild")
-        pq_meta = manifest.get("ivfpq")
+        scoped, manifest, query = self._serve_gate(name, question_vec)
+        pq_meta = manifest["ivfpq"]
         if pq_meta is None:
-            return self.spark.createDataFrame([], "id string, content string, score double")
-        # the index itself knows its dimension (m subspaces × sub-dim
-        # codebook centroids) — refuse mis-sized queries even when the
-        # collection never locked a dimension (content-only ingest embeds
-        # at serve time, so _locked_dimension can be None)
-        indexed_dim = pq_meta["m"] * len(pq_meta["codebooks"][0][0])
-        if len(question_vec) != indexed_dim:
-            raise EngineError(
-                "collection_vector_schema_mismatch",
-                detail=f"query dimension {len(question_vec)} != indexed {indexed_dim}",
-            )
+            return self._no_hits()
         codes = self.spark.read.parquet(str(self._index_root(scoped) / "ivfpq"))
         df = self._served_embeddings_df(name, scoped)
         corpus = df.where(F.col("embedding").isNotNull()).select("id", "embedding")
@@ -1925,18 +1884,14 @@ class CollectionEngine:
             pq_meta["centroids"],
             pq_meta["codebooks"],
             corpus,
-            question_vec,
+            query,
             k,
             shortlist=shortlist,
             nprobe=nprobe,
             id_col="id",
             metric=metric,
         ).select("id", "score")
-        return (
-            df.join(F.broadcast(hits), "id")
-            .select("id", "content", "score")
-            .orderBy(*self._metric_order(metric, F.col("score"), F.col("id")))
-        )
+        return self._ranked(df, hits, metric)
 
     def indexed_filtered_search(
         self,
@@ -1977,8 +1932,6 @@ class CollectionEngine:
         indexes with ``index_not_fresh`` — the same staleness contract as
         every indexed search. Returns (id, content, score) best-first;
         < 2 indexed vectors answers empty."""
-        import json
-
         from vector_mcp_spark.operators.graph_ann import ann_filtered_topk_routed
 
         if not isinstance(payload_filter, dict) or not payload_filter:
@@ -2012,33 +1965,11 @@ class CollectionEngine:
                         detail="condition keys must be gt/gte/lt/lte or 'any', "
                         f"got {sorted(value)}",
                     )
-        scoped = self._require(name)
-        question_vec = [float(x) for x in question_vec]
-        dim = self._locked_dimension(scoped)
-        if dim is not None and len(question_vec) != dim:
-            raise EngineError(
-                "collection_vector_schema_mismatch",
-                detail=f"query dimension {len(question_vec)} != locked {dim}",
-            )
-        if self.index_status(name) not in ("fresh", "repaired"):
-            raise EngineError("index_not_fresh")
-        manifest = json.loads((self._index_root(scoped) / "manifest.json").read_text())
-        if "graph" not in manifest:
-            # guards the manifest-rewritten-between-reads race exactly like
-            # indexed_graph_search: refusing beats silently answering empty
-            # for the same condition (ADVICE r11)
-            raise EngineError("index_not_fresh", detail="graph family missing; rebuild")
-        if dim is None and manifest.get("dimension") is not None:
-            # same manifest-width refusal as indexed_graph_search
-            if len(question_vec) != int(manifest["dimension"]):
-                raise EngineError(
-                    "collection_vector_schema_mismatch",
-                    detail=f"query dimension {len(question_vec)} != indexed {manifest['dimension']}",
-                )
-        meta = manifest.get("graph") or {}
+        scoped, manifest, question_vec = self._serve_gate(name, question_vec)
+        entry = (manifest.get("graph") or {}).get("entry")
+        if entry is None:
+            return self._no_hits()
         df = self._served_embeddings_df(name, scoped)
-        if meta.get("entry") is None:
-            return self.spark.createDataFrame([], "id string, content string, score double")
         cond = None
         indexed_ids = None  # semi-join side from fresh payload indexes
 
@@ -2088,7 +2019,7 @@ class CollectionEngine:
         )
         metric = manifest.get("distance") or "cosine"
         hits, _regime = ann_filtered_topk_routed(
-            query, corpus, edges, meta["entry"], allowed, k, ef=ef, id_col="id",
+            query, corpus, edges, entry, allowed, k, ef=ef, id_col="id",
             exclude_self=False,  # the query is synthetic, not a corpus row
             selectivity_threshold=selectivity_threshold,
             # the manifest recorded the corpus cardinality at build time
@@ -2097,11 +2028,7 @@ class CollectionEngine:
             n_total=int(manifest["n_vectors"]),
             metric=metric,
         )
-        return (
-            df.join(F.broadcast(hits.select(F.col("neighbor_id").alias("id"), "score")), "id")
-            .select("id", "content", "score")
-            .orderBy(*self._metric_order(metric, F.col("score"), F.col("id")))
-        )
+        return self._ranked(df, hits.select(F.col("neighbor_id").alias("id"), "score"), metric)
 
     def profile_collection(self, name: str) -> DataFrame:
         """Data-quality profile of a collection: per-signal row/null counts,
@@ -2275,16 +2202,13 @@ class CollectionEngine:
         Layout is payload_<key>/data + payload_<key>/manifest.json (a
         dotted key like "x.json" can never collide with another key's
         manifest). Returns {"key", "n_values", "n_rows", "fingerprint"}."""
-        import json
-        import shutil
-
         scoped = self._require(name)
         self._validate_payload_key(key)
         # fingerprint BEFORE reading: a mutation landing mid-build then
         # makes the manifest's fp mismatch the table -> 'stale' -> scan
         # fallback. Capturing after the write would stamp a post-mutation
         # fp over pre-mutation index data — a fresh-but-wrong index.
-        fp = self._table_fingerprint(scoped)
+        fp = _dir_fingerprint(self._table_path(scoped))
         root = self._index_root(scoped) / f"payload_{key}"
         # clear the pre-hardening layout (flat manifest file + raw value=*
         # dirs directly under the key dir) so a rebuild never leaves a
@@ -2330,21 +2254,19 @@ class CollectionEngine:
             "fingerprint": fp,
         }
 
+    def _payload_state(self, scoped: str, family: str, key: str) -> tuple[str, dict | None]:
+        """State of one key's payload index (``family`` is ``payload`` or
+        ``payload_range``): the same reader as every index family, against
+        the table fingerprint the build stamped."""
+        self._validate_payload_key(key)
+        return self._manifest_state(
+            self._index_root(scoped) / f"{family}_{key}" / "manifest.json",
+            self._table_path(scoped),
+        )
+
     def payload_index_status(self, name: str, key: str) -> str:
         """'absent' | 'fresh' | 'stale' for one key's payload index."""
-        scoped = self._require(name)
-        self._validate_payload_key(key)
-        manifest = self._index_root(scoped) / f"payload_{key}" / "manifest.json"
-        if not manifest.exists():
-            return "absent"
-        import json
-
-        meta = json.loads(manifest.read_text())
-        return (
-            "fresh"
-            if meta.get("fingerprint") == self._table_fingerprint(scoped)
-            else "stale"
-        )
+        return self._payload_state(self._require(name), "payload", key)[0]
 
     def count_by_payload(self, name: str, key: str, value: str) -> int:
         """Equality-filtered count served from the payload index when it is
@@ -2352,21 +2274,9 @@ class CollectionEngine:
         from the table scan — the accelerator contract: never wrong, at
         worst unaccelerated."""
         scoped = self._require(name)
-        self._validate_payload_key(key)
-        if self.payload_index_status(name, key) == "fresh":
-            # explicit schema: partition-column type inference would read
-            # all-numeric hex keys back as ints, and a value-less index
-            # directory (every row had a NULL for the key) has nothing to
-            # infer from. The lookup key uses the same encoding the build
-            # wrote; the raw-value post-filter keeps sha-bucketed (long)
-            # values exact and is a no-op for hex buckets.
-            idx = self.spark.read.schema("id string, value string, vkey string").parquet(
-                str(self._index_root(scoped) / f"payload_{key}" / "data")
-            )
-            vkey = self._payload_vkey_py(str(value))
-            return idx.where(
-                (F.col("vkey") == vkey) & (F.col("value") == str(value))
-            ).count()
+        allowed = self._equality_allowed_ids(scoped, key, [str(value)])
+        if allowed is not None:
+            return allowed.count()
         return self.count_documents(
             name, where=F.col("metadata")[key] == str(value)
         )
@@ -2395,8 +2305,6 @@ class CollectionEngine:
         family: payload_range_<key>/data + manifest.json recording the
         band geometry. Returns {"key", "n_rows", "vmin", "vmax",
         "n_bands", "fingerprint"}."""
-        import json
-
         scoped = self._require(name)
         self._validate_payload_key(key)
         n_bands = self._PAYLOAD_RANGE_BANDS if n_bands is None else int(n_bands)
@@ -2405,7 +2313,7 @@ class CollectionEngine:
         # fingerprint BEFORE reading (same mid-build-mutation reasoning as
         # the equality family): a mutation landing after this read makes
         # the manifest mismatch -> stale -> scan fallback, never a lie
-        fp = self._table_fingerprint(scoped)
+        fp = _dir_fingerprint(self._table_path(scoped))
         vals = (
             self.read(name)
             .select("id", F.col("metadata")[key].try_cast("double").alias("value"))
@@ -2414,8 +2322,6 @@ class CollectionEngine:
         bounds = vals.agg(F.min("value").alias("lo"), F.max("value").alias("hi")).first()
         root = self._index_root(scoped) / f"payload_range_{key}"
         if bounds.lo is None:  # no numeric values: empty index, still fresh
-            import shutil
-
             shutil.rmtree(root / "data", ignore_errors=True)
             root.mkdir(parents=True, exist_ok=True)
             (root / "manifest.json").write_text(json.dumps(
@@ -2462,19 +2368,7 @@ class CollectionEngine:
 
     def payload_range_index_status(self, name: str, key: str) -> str:
         """'absent' | 'fresh' | 'stale' for one key's range index."""
-        import json
-
-        scoped = self._require(name)
-        self._validate_payload_key(key)
-        manifest = self._index_root(scoped) / f"payload_range_{key}" / "manifest.json"
-        if not manifest.exists():
-            return "absent"
-        meta = json.loads(manifest.read_text())
-        return (
-            "fresh"
-            if meta.get("fingerprint") == self._table_fingerprint(scoped)
-            else "stale"
-        )
+        return self._payload_state(self._require(name), "payload_range", key)[0]
 
     def _equality_allowed_ids(
         self, scoped: str, key: str, values: list[str]
@@ -2484,17 +2378,14 @@ class CollectionEngine:
         partition per value opens — the qdrant ``MatchValue``/``MatchAny``
         acceleration), or None when the index is absent/stale — the
         caller falls back to the metadata scan."""
-        import json
-
-        root = self._index_root(scoped) / f"payload_{key}"
-        manifest = root / "manifest.json"
-        if not manifest.exists():
+        if self._payload_state(scoped, "payload", key)[0] != "fresh":
             return None
-        meta = json.loads(manifest.read_text())
-        if meta.get("fingerprint") != self._table_fingerprint(scoped):
-            return None
+        # explicit schema: partition-column type inference would read
+        # all-numeric hex keys back as ints, and a value-less index
+        # directory (every row had a NULL for the key) has nothing to
+        # infer from
         idx = self.spark.read.schema("id string, value string, vkey string").parquet(
-            str(root / "data")
+            str(self._index_root(scoped) / f"payload_{key}" / "data")
         )
         vkeys = sorted({self._payload_vkey_py(v) for v in values})
         # vkey is the partition column — only the values' partitions open;
@@ -2510,20 +2401,14 @@ class CollectionEngine:
         FRESH range index (band partition pruning + exact post-filter), or
         None when the index is absent/stale/empty-geometry — the caller
         falls back to the table scan."""
-        import json
-
-        root = self._index_root(scoped) / f"payload_range_{key}"
-        manifest = root / "manifest.json"
-        if not manifest.exists():
-            return None
-        meta = json.loads(manifest.read_text())
-        if meta.get("fingerprint") != self._table_fingerprint(scoped):
+        status, meta = self._payload_state(scoped, "payload_range", key)
+        if status != "fresh":
             return None
         if meta.get("vmin") is None:  # built over zero numeric values
             return self.spark.createDataFrame([], "id string")
         vmin, vmax, nb = float(meta["vmin"]), float(meta["vmax"]), int(meta["n_bands"])
         idx = self.spark.read.schema("id string, value double, band int").parquet(
-            str(root / "data")
+            str(self._index_root(scoped) / f"payload_range_{key}" / "data")
         )
         # band bounds from the same arithmetic the build wrote — these are
         # PARTITION filters, so only overlapping band dirs are ever opened.

@@ -7,14 +7,10 @@ id — the exact-dedup key (``vector_api.py:363-366``).
 
 Spark-side we keep the semantics (deterministic content-addressed id) with
 ``sha2(content, 256)`` as the primary form — a pure JVM expression that the
-DuckDB oracle reproduces with ``sha256(content)``. The uuid5 rendering of the
-same digest is available as a driver-side helper for API parity.
+DuckDB oracle reproduces with ``sha256(content)``.
 """
 
 from __future__ import annotations
-
-import hashlib
-import uuid
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -25,8 +21,3 @@ def content_hash_id(content: Column | str) -> Column:
     col = F.col(content) if isinstance(content, str) else content
     return F.sha2(col, 256)
 
-
-def uuid5_of_content(content: str) -> str:
-    """Reference-identical id rendering (``vector_api.py:303-317``)."""
-    digest = hashlib.sha256(content.encode("utf-8")).hexdigest()
-    return str(uuid.uuid5(uuid.NAMESPACE_OID, digest))

@@ -37,6 +37,7 @@ controlled by the blocking keys exactly like dedup.py's banded LSH join.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -44,6 +45,7 @@ from pyspark.sql import functions as F
 
 from vector_mcp_spark.functions.vector import dot
 from vector_mcp_spark.operators.similarity import SCORE_DECIMALS
+from vector_mcp_spark.validation import EngineError
 
 #: beam hops per layer, top layer first — FIXED so the SQL oracle can unroll
 HNSW_HOPS: tuple[tuple[int, int], ...] = ((2, 1), (1, 2), (0, 4))
@@ -444,6 +446,18 @@ def _sql_str_lit(value: object) -> str:
     return repr(value)
 
 
+def _vec_sql(vec: Sequence[float]) -> str:
+    """SQL literal of one query vector (float32, like the stored column).
+    NaN/Inf have no SQL literal, so they refuse with the engine's width
+    code instead of reaching the parser."""
+    vals = [float(x) for x in vec]
+    if not all(math.isfinite(x) for x in vals):
+        raise EngineError(
+            "collection_vector_schema_mismatch", detail="query vector has NaN/Inf elements"
+        )
+    return "CAST(array({}) AS ARRAY<FLOAT>)".format(", ".join(f"{x!r}D" for x in vals))
+
+
 def _dot_sql(a: str, b: str) -> str:
     """SQL text of functions.vector.dot: zip_with + aggregate sequential
     fold over double-widened elements — the exact expression the DataFrame
@@ -508,9 +522,7 @@ def ann_hnsw_prepared_sql(
     # (beam x self-looped edges) plus one scoring join against nodes. The
     # norm is the same expression over the same literal array, so qn (and
     # every score derived from it) is bit-equal to the DataFrame path's.
-    qv = "CAST(array({}) AS ARRAY<FLOAT>)".format(
-        ", ".join(f"{float(x)!r}D" for x in question_vec)
-    )
+    qv = _vec_sql(question_vec)
     qn = _norm_sql(qv, metric)
     qid, ent = _sql_str_lit(query_id), _sql_str_lit(entry)
     score = _pair_score_sql(metric, qv, qn, "nd.v", "nd.n")
@@ -616,17 +628,14 @@ def ann_hnsw_multi_prepared_sql(
     the full oracle replay of every converted suite entry."""
     if metric not in GRAPH_METRICS:
         raise ValueError(f"unknown metric {metric!r}; one of {sorted(GRAPH_METRICS)}")
+    if not queries:  # an empty VALUES list is not SQL
+        raise EngineError("collection_vector_schema_mismatch", detail="empty query batch")
 
     def id_lit(v: object) -> str:
         s = _sql_str_lit(v)
         return s if isinstance(v, str) else f"CAST({s} AS {id_sql_type})"
 
-    def vec_lit(vec: Sequence[float]) -> str:
-        return "CAST(array({}) AS ARRAY<FLOAT>)".format(
-            ", ".join(f"{float(x)!r}D" for x in vec)
-        )
-
-    values = ",\n    ".join(f"({id_lit(qid)}, {vec_lit(v)})" for qid, v in queries)
+    values = ",\n    ".join(f"({id_lit(qid)}, {_vec_sql(v)})" for qid, v in queries)
     ent = id_lit(entry)
     score = _pair_score_sql(metric, "q.qv", "q.qn", "nd.v", "nd.n")
     order = _order_sql(metric)

@@ -45,11 +45,6 @@ def get_by_ids(
     return out
 
 
-def duplicate_ids_in_batch(batch: DataFrame, id_col: str = "id") -> DataFrame:
-    """T8 in-batch duplicate detection (qdrant.py:176-189 guard)."""
-    return batch.groupBy(id_col).count().where(F.col("count") > 1).select(id_col)
-
-
 def _ids_df(df: DataFrame, ids, id_col: str) -> DataFrame:
     if isinstance(ids, DataFrame):
         return ids.select(F.col(ids.columns[0]).alias(id_col))

@@ -387,41 +387,6 @@ def embedding_near_dup_blocked(
     return cross.unionByName(intra)
 
 
-def embedding_near_dup_pairs(
-    corpus: DataFrame,
-    threshold: float,
-    dim: int,
-    id_col: str = "id",
-    emb_col: str = "embedding",
-    n_planes: int = 8,
-) -> DataFrame:
-    """Embedding-cosine near-dup: LSH candidates (any shared per-table
-    bucket) verified by exact cosine ≥ threshold. Returns (id_a, id_b, score)."""
-    bucketed, _ = lsh_bucketize(corpus, dim=dim, n_planes=n_planes, n_tables=4, emb_col=emb_col)
-    exploded = bucketed.select(
-        F.col(id_col).alias("_id"), F.col(emb_col).alias("_v"),
-        l2_norm(F.col(emb_col)).alias("_n"),
-        F.posexplode("buckets").alias("tbl", "bucket"),
-    )
-    a = exploded.select(F.col("_id").alias("id_a"), F.col("_v").alias("va"), F.col("_n").alias("_na"), "tbl", "bucket")
-    b = exploded.select(F.col("_id").alias("id_b"), F.col("_v").alias("vb"), F.col("_n").alias("_nb"), "tbl", "bucket")
-    pairs = (
-        a.join(b, ["tbl", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "va", "_na", "id_b", "vb", "_nb")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        pairs.withColumn(
-            "score",
-            F.round(F.try_divide(dot(F.col("va"), F.col("vb")), F.col("_na") * F.col("_nb")), SCORE_DECIMALS),
-        )
-        .where(F.col("score") >= threshold)
-        .select("id_a", "id_b", "score")
-        .distinct()
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN: coarse k-means quantizer + cluster-pruned search
 # ---------------------------------------------------------------------------
