@@ -1601,7 +1601,7 @@ def test_repair_search_index_grows_and_serves(spark, tmp_path_factory):
     on the grown corpus clears the rebuild floor (0.85)."""
     from vector_mcp_spark.engine import CollectionEngine
     from vector_mcp_spark.functions.embedder import embed_documents, hash_embed
-    from vector_mcp_spark.operators.graph_ann import ann_hnsw_topk
+    from vector_mcp_spark.operators.graph_ann import ann_hnsw_sql, hnsw_serve_set
     from vector_mcp_spark.operators.similarity import cosine_self_join_topk
 
     eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("repair_root")))
@@ -1640,12 +1640,15 @@ def test_repair_search_index_grows_and_serves(spark, tmp_path_factory):
     edges = spark.read.parquet(str(eng._index_root(scoped) / "graph"))
     corpus = embed_documents(eng.read("g"), text_col="content", out_col="embedding")
     queries = corpus.orderBy("id").limit(20)
+    ss = hnsw_serve_set(corpus, edges)
+    lits = [(r.id, list(r.embedding)) for r in queries.collect()]
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in ann_hnsw_topk(
-            queries, corpus, edges, manifest["graph"]["entry"], k=5, ef=48
+        for r in spark.sql(
+            ann_hnsw_sql(ss, manifest["graph"]["entry"], lits, k=5, ef=48)
         ).collect()
     }
+    ss.drop()
     exact = {
         (r.query_id, r.neighbor_id)
         for r in cosine_self_join_topk(queries, corpus, 5).collect()
@@ -2793,74 +2796,3 @@ def test_indexed_filtered_search_equality_and_matchany_use_payload_index(
                 {"any": ["t1"], "gte": 1}, {"any": [str(i) for i in range(257)]}):
         with _pytest.raises(EngineError, match="payload_filter_invalid|payload_range_invalid"):
             eng.indexed_filtered_search("eq", qv, {"team": bad}, k=5)
-
-
-@pytest.mark.slow
-def test_prepared_descent_matches_dataframe_path(spark):
-    """The engine's prepared single-query descent SQL (r14) must be
-    row-for-row, bit-for-bit identical to ann_hnsw_topk's DataFrame path
-    under every metric — same candidates, same HOF fold scores, same
-    tie-breaks (zero-norm vector included to exercise the guard)."""
-    import random
-
-    from vector_mcp_spark.operators.graph_ann import (
-        ann_hnsw_multi_prepared_sql,
-        ann_hnsw_prepared_sql,
-        ann_hnsw_topk,
-        hnsw_build,
-        hnsw_serve_set,
-    )
-    from vector_mcp_spark.operators.similarity import ivf_build
-
-    rng = random.Random(11)
-    dim, n = 8, 24
-    rows = [
-        (f"id{i:04d}", [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(n)
-    ]
-    rows[3] = (rows[3][0], [0.0] * dim)  # zero-norm guard
-    corpus = spark.createDataFrame(rows, "id string, embedding array<float>")
-    for metric in ("cosine", "dot", "l2"):
-        coarse = "l2" if metric == "l2" else "cosine"
-        assigned, _ = ivf_build(
-            corpus, n_centroids=4, id_col="id", emb_col="embedding", metric=coarse
-        )
-        edges, meta = hnsw_build(assigned, id_col="id", emb_col="embedding", metric=metric)
-        nodes_ck, edges_ck = hnsw_serve_set(corpus, edges, metric=metric)
-        nodes_ck.createOrReplaceTempView("t_prep_nodes")
-        edges_ck.createOrReplaceTempView("t_prep_edges")
-        qv = [rng.uniform(-1, 1) for _ in range(dim)]
-        q = spark.createDataFrame([("__q__", qv)], "id string, embedding array<float>")
-        df_rows = ann_hnsw_topk(
-            q, corpus, None, meta["entry"], k=5, ef=48, id_col="id",
-            exclude_self=False, metric=metric, serve_set=(nodes_ck, edges_ck),
-        ).collect()
-        sql_rows = spark.sql(
-            ann_hnsw_prepared_sql(
-                "t_prep_nodes", "t_prep_edges", meta["entry"], qv, k=5, ef=48,
-                metric=metric,
-            )
-        ).collect()
-        a = [(r.query_id, r.rank, r.neighbor_id, r.score) for r in df_rows]
-        b = [(r.query_id, r.rank, r.neighbor_id, r.score) for r in sql_rows]
-        assert a == b, f"prepared descent diverged under {metric}: {a} vs {b}"
-
-        # multi-query VALUES variant (the suite entries' shape): corpus-drawn
-        # queries, exclude_self=True, broadcast hint on — still bit-equal
-        mq = [(rid, list(vec)) for rid, vec in rows[:3]]
-        mdf = spark.createDataFrame(
-            [(rid, vec) for rid, vec in mq], "id string, embedding array<float>"
-        )
-        df_rows = ann_hnsw_topk(
-            mdf, corpus, None, meta["entry"], k=5, ef=48, id_col="id",
-            exclude_self=True, metric=metric, serve_set=(nodes_ck, edges_ck),
-        ).collect()
-        sql_rows = spark.sql(
-            ann_hnsw_multi_prepared_sql(
-                "t_prep_nodes", "t_prep_edges", meta["entry"], mq, k=5, ef=48,
-                metric=metric, exclude_self=True, broadcast_edges=True,
-            )
-        ).collect()
-        srt = lambda rs: sorted(  # noqa: E731
-            [(r.query_id, r.rank, r.neighbor_id, r.score) for r in rs]
-        )
-        assert srt(df_rows) == srt(sql_rows), f"multi prepared diverged under {metric}"

@@ -111,17 +111,15 @@ def test_non_finite_query_refused_before_sql(lifecycle, serve, bad, monkeypatch)
 
 
 def test_prepared_builders_reject_non_finite_and_empty_batches():
-    from vector_mcp_spark.operators.graph_ann import (
-        ann_hnsw_multi_prepared_sql,
-        ann_hnsw_prepared_sql,
-    )
+    from vector_mcp_spark.operators.graph_ann import HnswServeSet, ann_hnsw_sql
 
+    ss = HnswServeSet(None, None, "n", "e", 2, False, "cosine")
     with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
-        ann_hnsw_prepared_sql("n", "e", "a", [1.0, float("nan")], k=2)
+        ann_hnsw_sql(ss, "a", [("__q__", [1.0, float("nan")])], k=2)
     with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
-        ann_hnsw_multi_prepared_sql("n", "e", 1, [(1, [float("-inf"), 0.0])], k=2)
+        ann_hnsw_sql(ss, 1, [(1, [float("-inf"), 0.0])], k=2)
     with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
-        ann_hnsw_multi_prepared_sql("n", "e", 1, [], k=2)
+        ann_hnsw_sql(ss, 1, [], k=2)
 
 
 def test_serve_set_cache_is_bounded_and_purged(lifecycle, spark, tmp_path, monkeypatch):
@@ -184,3 +182,35 @@ def test_racing_misses_share_one_serve_set(lifecycle, spark, tmp_path, monkeypat
     (cached,) = eng._graph_serve_sets.values()
     views_after = {t.name for t in spark.catalog.listTables() if t.isTemporary}
     assert views_after - views_before == set(cached[2:4])
+
+
+def test_filtered_graph_regime_builds_the_serve_set_once(lifecycle, spark, tmp_path, monkeypatch):
+    """Two filtered serves routed to the graph regime share the engine's
+    cached serve set: one build, not a re-checkpoint of the corpus, the
+    edges and the query per call."""
+    from vector_mcp_spark.engine import CollectionEngine
+    from vector_mcp_spark.operators import graph_ann
+
+    src, _, _ = lifecycle
+    shutil.copytree(src.root, tmp_path / "wh")
+    eng = CollectionEngine(spark, str(tmp_path / "wh"))
+    builds, regimes = [], []
+    build, route = graph_ann.hnsw_serve_set, graph_ann.ann_filtered_topk_routed
+
+    def counted_build(*a, **kw):
+        builds.append(1)
+        return build(*a, **kw)
+
+    def recorded_route(*a, **kw):
+        hits, regime = route(*a, **kw)
+        regimes.append(regime)
+        return hits, regime
+
+    monkeypatch.setattr(graph_ann, "hnsw_serve_set", counted_build)
+    monkeypatch.setattr(graph_ann, "ann_filtered_topk_routed", recorded_route)
+    first, second = (
+        eng.indexed_filtered_search("g", QUERY, {"tier": "a"}, k=2).collect() for _ in range(2)
+    )
+    assert regimes == ["graph", "graph"]
+    assert len(builds) == 1
+    assert first and first == second

@@ -616,30 +616,17 @@ def _loop_sq(col, dim):
     return acc
 
 
-def _loop_dot_fixed(a, b, dim):
-    acc = None
-    for i in range(dim):
-        t = a[i].cast("double") * b[i].cast("double")
-        acc = t if acc is None else acc + t
-    return acc
-
-
 def test_sql_fast_builders_match_loop_trees(spark):
     import re
 
     from vector_mcp_spark.functions.vector import (
-        cosine_similarity_fixed,
-        dot_fixed,
         l2_distance_lit,
         l2_norm_fixed,
         sq_norm_fixed,
         sq_norm_py,
     )
 
-    df = spark.createDataFrame(
-        [(1, [0.5, -1.25, 3.0, 1e-05], [2.0, 0.1, -0.0, 7.5])],
-        "id long, embedding array<float>, qv array<float>",
-    )
+    df = spark.createDataFrame([(1, [0.5, -1.25, 3.0, 1e-05])], "id long, embedding array<float>")
     vec = [0.1, -2.5, 1e-05, 3.0]
     c = F.col("embedding")
     inner_old = (
@@ -656,18 +643,6 @@ def test_sql_fast_builders_match_loop_trees(spark):
             ),
             cosine_similarity_lit("embedding", vec),
         ),
-        "dot_fixed": (
-            _loop_dot_fixed(F.col("embedding"), F.col("qv"), 4),
-            dot_fixed("embedding", "qv", 4),
-        ),
-        "cosine_fixed": (
-            F.try_divide(
-                _loop_dot_fixed(F.col("embedding"), F.col("qv"), 4),
-                F.sqrt(_loop_sq(F.col("embedding"), 4))
-                * F.sqrt(_loop_sq(F.col("qv"), 4)),
-            ),
-            cosine_similarity_fixed("embedding", "qv", 4),
-        ),
         "l2_distance_lit": (
             F.sqrt(F.when(inner_old < F.lit(0.0), F.lit(0.0)).otherwise(inner_old)),
             l2_distance_lit("embedding", vec),
@@ -681,16 +656,33 @@ def test_sql_fast_builders_match_loop_trees(spark):
 
 
 def test_sql_fast_builders_column_input_and_fallback(spark):
-    from vector_mcp_spark.functions.vector import _ref_sql
+    from vector_mcp_spark.functions.vector import (
+        _ref_sql,
+        l2_distance_lit,
+        l2_norm_fixed,
+        sq_norm_fixed,
+    )
 
-    # plain Column references take the fast path; derived expressions fall back
+    # plain column references (names or F.col) render as SQL text
     assert _ref_sql(F.col("embedding")) == "embedding"
     assert _ref_sql("qv") == "qv"
-    assert _ref_sql(F.col("embedding")[0]) is None
-    assert _ref_sql(F.lit(1.0)) is None
-    # fallback still computes: a derived column operand
+    # a derived operand has no reference to render: the builders refuse it
+    derived = F.transform("v", lambda x: x * 2)
+    for bad in (F.col("embedding")[0], F.lit(1.0), derived):
+        with pytest.raises(ValueError, match="column reference"):
+            _ref_sql(bad)
+    with pytest.raises(ValueError, match="column reference"):
+        dot_lit(derived, [1.0, 1.0])
+    with pytest.raises(ValueError, match="column reference"):
+        cosine_similarity_lit(derived, [1.0, 1.0])
+    # a zero-length vector keeps its fold-seed results: dot 0, norms 0,
+    # distance 0, cosine NULL (0 / 0 under try_divide)
     df = spark.createDataFrame([(1, [1.0, 2.0])], "id long, v array<float>")
     got = df.select(
-        dot_lit(F.transform("v", lambda x: x * 2), [1.0, 1.0]).alias("s")
+        dot_lit("v", []).alias("d"),
+        sq_norm_fixed("v", 0).alias("sq"),
+        l2_norm_fixed("v", 0).alias("n"),
+        l2_distance_lit("v", []).alias("l2"),
+        cosine_similarity_lit("v", []).alias("c"),
     ).first()
-    assert got.s == pytest.approx(6.0)
+    assert (got.d, got.sq, got.n, got.l2, got.c) == (0.0, 0.0, 0.0, 0.0, None)

@@ -187,13 +187,26 @@ def test_semantic_dedup_keep_first_within_cluster(spark):
     assert got == {1: True, 2: False, 3: True, 4: True, 5: True}
 
 
+def _hnsw_rows(embs, edges, entry, queries, metric="cosine"):
+    """Rows of the beam descent (k=5, ef=48, self excluded) for the
+    corpus-drawn ``queries`` over a serve set of ``embs``."""
+    from vector_mcp_spark.operators.graph_ann import ann_hnsw_sql, hnsw_serve_set
+
+    ss = hnsw_serve_set(embs, edges, id_col="vec_id", metric=metric)
+    lits = [(r.vec_id, list(r.embedding)) for r in queries.collect()]
+    try:
+        return embs.sparkSession.sql(ann_hnsw_sql(ss, entry, lits, k=5, ef=48)).collect()
+    finally:
+        ss.drop()
+
+
 @pytest.mark.slow
 def test_hnsw_recall_threshold(embs):
     """The HNSW-style graph-ANN recall contract (the last reference index
     family, epistemic_graph.py:5-9 / postgres.py:182-188). Measured on this
     hash-random corpus (the worst case): 1.00 at sf0.001/0.01, 0.98 at
     sf0.1 — gated at the IVF-np12 floor with margin."""
-    from vector_mcp_spark.operators.graph_ann import ann_hnsw_topk, hnsw_build
+    from vector_mcp_spark.operators.graph_ann import hnsw_build
     from vector_mcp_spark.operators.similarity import ivf_build
 
     queries = embs.where(F.col("vec_id") < 20)
@@ -204,10 +217,7 @@ def test_hnsw_recall_threshold(embs):
     assigned, _ = ivf_build(embs, n_centroids=16, id_col="vec_id", max_iter=2)
     edges, meta = hnsw_build(assigned, m=12, id_col="vec_id")
     approx = {
-        (r.query_id, r.neighbor_id)
-        for r in ann_hnsw_topk(
-            queries, embs, edges, meta["entry"], k=5, ef=48, id_col="vec_id"
-        ).collect()
+        (r.query_id, r.neighbor_id) for r in _hnsw_rows(embs, edges, meta["entry"], queries)
     }
     rec = len(exact & approx) / len(exact)
     assert rec >= 0.85, f"HNSW(M=12, ef=48) recall@5 {rec} < 0.85"
@@ -257,6 +267,7 @@ def test_filtered_ann_selectivity_routing(embs):
     from vector_mcp_spark.operators.graph_ann import (
         ann_filtered_topk_routed,
         hnsw_build,
+        hnsw_serve_set,
     )
     from vector_mcp_spark.operators.similarity import ivf_build
 
@@ -269,11 +280,13 @@ def test_filtered_ann_selectivity_routing(embs):
     ).select("vec_id")
     broad = embs.where(F.col("label") % 2 == 0).select("vec_id")
 
+    ss = hnsw_serve_set(embs, edges, id_col="vec_id")
+    lits = [(r.vec_id, list(r.embedding)) for r in queries.collect()]
     out_sel, regime_sel = ann_filtered_topk_routed(
-        queries, embs, edges, meta["entry"], selective, k=5, id_col="vec_id"
+        ss.nodes, lambda: ss, meta["entry"], lits, selective, 5, ss.n_nodes
     )
     out_broad, regime_broad = ann_filtered_topk_routed(
-        queries, embs, edges, meta["entry"], broad, k=5, id_col="vec_id"
+        ss.nodes, lambda: ss, meta["entry"], lits, broad, 5, ss.n_nodes
     )
     assert regime_sel == "exact"
     assert regime_broad == "graph"
@@ -343,7 +356,7 @@ def test_hnsw_l2_recall_threshold(embs):
     recall graded against the exact EUCLIDEAN top-k — the pgvector
     vector_l2_ops hnsw contract."""
     from vector_mcp_spark.functions.vector import l2_distance
-    from vector_mcp_spark.operators.graph_ann import ann_hnsw_topk, hnsw_build
+    from vector_mcp_spark.operators.graph_ann import hnsw_build
     from vector_mcp_spark.operators.similarity import ivf_build
 
     queries = embs.where(F.col("vec_id") < 20)
@@ -368,18 +381,15 @@ def test_hnsw_l2_recall_threshold(embs):
     edges, meta = hnsw_build(assigned, m=12, id_col="vec_id", metric="l2")
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in ann_hnsw_topk(
-            queries, embs, edges, meta["entry"], k=5, ef=48, id_col="vec_id", metric="l2"
-        ).collect()
+        for r in _hnsw_rows(embs, edges, meta["entry"], queries, metric="l2")
     }
     rec = len(exact & approx) / len(exact)
     assert rec >= 0.85, f"HNSW-l2(M=12, ef=48) recall@5 {rec} < 0.85"
     scores = [
         r.score
-        for r in ann_hnsw_topk(
-            queries.where(F.col("vec_id") == 0), embs, edges, meta["entry"],
-            k=5, ef=48, id_col="vec_id", metric="l2",
-        ).collect()
+        for r in _hnsw_rows(
+            embs, edges, meta["entry"], queries.where(F.col("vec_id") == 0), metric="l2"
+        )
     ]
     assert scores == sorted(scores), "l2 beam must rank ascending"
 
@@ -394,7 +404,7 @@ def test_hnsw_dot_recall_threshold(embs):
     from pyspark.sql import Window
 
     from vector_mcp_spark.functions.vector import dot
-    from vector_mcp_spark.operators.graph_ann import ann_hnsw_topk, hnsw_build
+    from vector_mcp_spark.operators.graph_ann import hnsw_build
     from vector_mcp_spark.operators.similarity import ivf_build
 
     queries = embs.where(F.col("vec_id") < 20)
@@ -416,18 +426,15 @@ def test_hnsw_dot_recall_threshold(embs):
     edges, meta = hnsw_build(assigned, m=12, id_col="vec_id", metric="dot")
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in ann_hnsw_topk(
-            queries, embs, edges, meta["entry"], k=5, ef=48, id_col="vec_id", metric="dot"
-        ).collect()
+        for r in _hnsw_rows(embs, edges, meta["entry"], queries, metric="dot")
     }
     rec = len(exact & approx) / len(exact)
     assert rec >= 0.85, f"HNSW-dot(M=12, ef=48) recall@5 {rec} < 0.85"
     scores = [
         r.score
-        for r in ann_hnsw_topk(
-            queries.where(F.col("vec_id") == 0), embs, edges, meta["entry"],
-            k=5, ef=48, id_col="vec_id", metric="dot",
-        ).collect()
+        for r in _hnsw_rows(
+            embs, edges, meta["entry"], queries.where(F.col("vec_id") == 0), metric="dot"
+        )
     ]
     assert scores == sorted(scores, reverse=True), "dot beam must rank descending"
 

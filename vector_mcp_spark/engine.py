@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import functools
 import hashlib
-import itertools
 import json
 import math
 import os
@@ -51,10 +50,6 @@ from vector_mcp_spark.validation import (
     validate_metric,
 )
 
-
-#: unique temp-view names for beam-serve working sets (one pair per
-#: serve-set build; session-scoped, so a plain process-wide counter is safe)
-_SERVE_VIEW_SEQ = itertools.count()
 
 #: beam-serve working sets one engine keeps open (LRU), so the cache is
 #: bounded by this constant, not by the number of collections served. Each
@@ -185,7 +180,7 @@ class CollectionEngine:
         self._table_format = transactional_format()
         # Beam-serve working sets per graph index build, LRU-bounded by
         # _SERVE_SET_CAP: (index root, manifest mtime_ns, metric) →
-        # materialized (nodes, edges, views). The mtime key makes any
+        # graph_ann.HnswServeSet. The mtime key makes any
         # rebuild a miss, and the freshness gate runs before this cache is
         # consulted, so a stale index can never be served from here.
         self._graph_serve_sets: OrderedDict[tuple, tuple] = OrderedDict()
@@ -193,12 +188,10 @@ class CollectionEngine:
         (self.root / "collections").mkdir(parents=True, exist_ok=True)
 
     def _graph_serve_set(self, index_root: Path, corpus, metric: str):
-        """Materialized (nodes, edges, nodes_view, edges_view, bcast_edges)
-        for one graph index build — the in-RAM working set a vector DB
-        keeps open next to its persisted graph, plus the temp-view names
-        the prepared single-query descent SQL references (one spark.sql
-        parse per serve instead of ~60 eagerly-analyzed DataFrame
-        transformations). Built once per (build, metric); a new build
+        """The :class:`~vector_mcp_spark.operators.graph_ann.HnswServeSet`
+        of one graph index build — the in-RAM working set a vector DB keeps
+        open next to its persisted graph, with the temp views every beam
+        descent renders over. Built once per (build, metric); a new build
         evicts the prior builds of the same root, and the least recently
         served set goes once more than _SERVE_SET_CAP are open."""
         from vector_mcp_spark.operators.graph_ann import hnsw_serve_set
@@ -213,45 +206,26 @@ class CollectionEngine:
         # older builds of this root only: a racing miss on the same or a
         # newer build keeps its set (and the views it is about to resolve)
         self._drop_serve_sets(lambda k: k[0] == key[0] and k[1] < key[1])
-        edges = self.spark.read.parquet(str(index_root / "graph"))
-        nodes, edges = hnsw_serve_set(
-            corpus, edges, id_col="id", emb_col="embedding", metric=metric
+        ss = hnsw_serve_set(
+            corpus, self.spark.read.parquet(str(index_root / "graph")), metric=metric
         )
-        seq = next(_SERVE_VIEW_SEQ)
-        nodes_view, edges_view = f"_hnsw_serve_nodes_{seq}", f"_hnsw_serve_edges_{seq}"
-        nodes.createOrReplaceTempView(nodes_view)
-        edges.createOrReplaceTempView(edges_view)
-        # measured broadcast gate for the descent's per-hop edge-union
-        # side (two id columns — the vectors never enter that relation):
-        # counted ONCE per build over the cached partitions, so the
-        # decision is scale-adaptive — a serve set that outgrows the
-        # session's own threshold never hints and the planner keeps
-        # building the ef-bounded beam side instead
-        try:
-            limit = int(self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-        except (TypeError, ValueError):
-            limit = 10 * 1024 * 1024
-        bcast_edges = 0 <= (nodes.count() + edges.count()) * 64 <= limit
-        ss = (nodes, edges, nodes_view, edges_view, bcast_edges)
         with self._serve_sets_guard:
             cached = self._graph_serve_sets.setdefault(key, ss)
             self._graph_serve_sets.move_to_end(key)
             overflow = list(self._graph_serve_sets)[:-_SERVE_SET_CAP]
         if cached is not ss:  # a racing miss inserted first: keep its set
-            for view in (nodes_view, edges_view):
-                self.spark.catalog.dropTempView(view)
+            ss.drop()
         self._drop_serve_sets(lambda k: k in overflow)
         return cached
 
     def _drop_serve_sets(self, match) -> None:
         """Forget every cached serve set whose key ``match``es and drop its
-        temp views (the checkpointed frames go with their last reference)."""
+        temp views."""
         with self._serve_sets_guard:
             gone = [self._graph_serve_sets.pop(k) for k in list(self._graph_serve_sets)
                     if match(k)]
         for ss in gone:
-            for view in ss[2:4]:
-                self.spark.catalog.dropTempView(view)
+            ss.drop()
 
     # -- catalog ------------------------------------------------------------
     #
@@ -1452,24 +1426,18 @@ class CollectionEngine:
     ) -> "DataFrame | None":
         """(id, score) beam-descent hits from one graph family — the default
         index or a named vector's — or None when the build recorded no
-        entry (< 2 vectors: nothing to traverse). The prepared single-query
-        descent is one spark.sql text over the cached serve-set views,
-        identical to ``ann_hnsw_topk(exclude_self=False)``: the query is not
-        a corpus row, so a document whose id equals the synthetic query id
-        must still be returnable."""
-        from vector_mcp_spark.operators.graph_ann import ann_hnsw_prepared_sql
+        entry (< 2 vectors: nothing to traverse). One spark.sql text over
+        the cached serve-set views; the query is a one-row literal batch
+        with ``exclude_self=False``: it is not a corpus row, so a document
+        whose id equals the synthetic query id must still be returnable."""
+        from vector_mcp_spark.operators.graph_ann import ann_hnsw_sql
 
         entry = (manifest.get("graph") or {}).get("entry")
         if entry is None:
             return None
-        _, _, nodes_view, edges_view, bcast_edges = self._graph_serve_set(
-            index_root, corpus, metric
-        )
+        ss = self._graph_serve_set(index_root, corpus, metric)
         return self.spark.sql(
-            ann_hnsw_prepared_sql(
-                nodes_view, edges_view, entry, query, k=k, ef=ef, metric=metric,
-                broadcast_edges=bcast_edges,
-            )
+            ann_hnsw_sql(ss, entry, [("__q__", query)], k=k, ef=ef, exclude_self=False)
         ).select(F.col("neighbor_id").alias("id"), "score")
 
     def indexed_lexical_search(self, name: str, query: str, k: int = 5) -> DataFrame:
@@ -1932,7 +1900,7 @@ class CollectionEngine:
         indexes with ``index_not_fresh`` — the same staleness contract as
         every indexed search. Returns (id, content, score) best-first;
         < 2 indexed vectors answers empty."""
-        from vector_mcp_spark.operators.graph_ann import ann_filtered_topk_routed
+        from vector_mcp_spark.operators.graph_ann import ann_filtered_topk_routed, hnsw_nodes
 
         if not isinstance(payload_filter, dict) or not payload_filter:
             raise EngineError(
@@ -2012,21 +1980,20 @@ class CollectionEngine:
                 indexed_ids if allowed is None
                 else allowed.join(indexed_ids, "id", "left_semi")
             )
-        edges = self.spark.read.parquet(str(self._index_root(scoped) / "graph"))
         corpus = df.where(F.col("embedding").isNotNull()).select("id", "embedding")
-        query = self.spark.createDataFrame(
-            [("__q__", question_vec)], "id string, embedding array<float>"
-        )
         metric = manifest.get("distance") or "cosine"
         hits, _regime = ann_filtered_topk_routed(
-            query, corpus, edges, entry, allowed, k, ef=ef, id_col="id",
-            exclude_self=False,  # the query is synthetic, not a corpus row
-            selectivity_threshold=selectivity_threshold,
+            hnsw_nodes(corpus, metric=metric),
+            # the graph route serves from the cached set of this build
+            functools.partial(self._graph_serve_set, self._index_root(scoped), corpus, metric),
+            entry, [("__q__", question_vec)], allowed, k,
             # the manifest recorded the corpus cardinality at build time
             # (repair keeps it current) — a served query must not pay a
             # corpus-wide count for the selectivity estimate
             n_total=int(manifest["n_vectors"]),
-            metric=metric,
+            metric=metric, ef=ef,
+            exclude_self=False,  # the query is synthetic, not a corpus row
+            selectivity_threshold=selectivity_threshold,
         )
         return self._ranked(df, hits.select(F.col("neighbor_id").alias("id"), "score"), metric)
 

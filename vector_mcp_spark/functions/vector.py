@@ -24,23 +24,25 @@ from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
 # Driver-side build cost (optimization guide §4, "the Python boundary"):
-# the unrolled _lit/_fixed builders below construct ~5 Column objects per
-# vector element, i.e. ~300 py4j round-trips for one 64-dim cosine — ~1.1 s
-# of pure DRIVER time per expression (measured r13), repeated per query and
-# per beam hop. When the operand is a plain column reference, the same
-# expression tree is instead rendered as ONE SQL string and parsed JVM-side
-# by F.expr() in ~4 ms. The parsed tree is IDENTICAL (analyzed plans match
-# byte-for-byte modulo expression ids — pinned by tests/test_properties.py),
-# so results are bit-equal; the Column-operand fallback keeps the old loop.
+# building the unrolled _lit/_fixed trees below as Column objects costs ~5
+# py4j round-trips per vector element — ~1.1 s of pure DRIVER time for one
+# 64-dim cosine (measured r13), repeated per query and per beam hop. So the
+# builders render the tree as ONE SQL string over a plain column reference
+# and parse it JVM-side with F.expr() in ~4 ms. The parsed tree is the one
+# the element loop would build (analyzed plans match modulo expression ids
+# — pinned by tests/test_properties.py), so results are bit-equal. A derived
+# operand has no such reference and raises ValueError.
 # ---------------------------------------------------------------------------
 
 _SIMPLE_REF = re.compile(r"^[A-Za-z_][A-Za-z0-9_.]*$")
 
 
-def _ref_sql(col: Column | str) -> str | None:
-    """SQL text of a simple (possibly qualified) column reference, else None."""
+def _ref_sql(col: Column | str) -> str:
+    """SQL text of a simple (possibly qualified) column reference."""
     name = col if isinstance(col, str) else col._jc.toString()  # noqa: SLF001
-    return name if _SIMPLE_REF.match(name) else None
+    if not _SIMPLE_REF.match(name):
+        raise ValueError(f"expected a column reference, got {name!r}")
+    return name
 
 
 def _dlit(x: float) -> str:
@@ -49,21 +51,16 @@ def _dlit(x: float) -> str:
 
 
 def _dot_lit_sql(ref: str, vec: Sequence[float]) -> str:
+    # an empty vector folds to 0.0, like the sequential fold's seed
     return " + ".join(
         f"(CAST({ref}[{i}] AS DOUBLE) * {_dlit(x)})" for i, x in enumerate(vec)
-    )
+    ) or "0.0D"
 
 
 def _sq_norm_sql(ref: str, dim: int) -> str:
     return " + ".join(
         f"(CAST({ref}[{i}] AS DOUBLE) * CAST({ref}[{i}] AS DOUBLE))" for i in range(dim)
-    )
-
-
-def _dot_fixed_sql(ra: str, rb: str, dim: int) -> str:
-    return " + ".join(
-        f"(CAST({ra}[{i}] AS DOUBLE) * CAST({rb}[{i}] AS DOUBLE))" for i in range(dim)
-    )
+    ) or "0.0D"
 
 
 def _as_double_array(col: Column | str) -> Column:
@@ -105,17 +102,7 @@ def dot_lit(col: Column | str, vec: Sequence[float]) -> Column:
     identical to the sequential fold (and to DuckDB ``list_dot_product``):
     results are bit-equal.
     """
-    ref = _ref_sql(col)
-    if ref is not None and len(vec) > 0:
-        return F.expr(_dot_lit_sql(ref, vec))
-    col = F.col(col) if isinstance(col, str) else col
-    acc: Column | None = None
-    for i, x in enumerate(vec):
-        term = col[i].cast("double") * float(x)
-        acc = term if acc is None else acc + term
-    if acc is None:
-        return F.lit(0.0)
-    return acc
+    return F.expr(_dot_lit_sql(_ref_sql(col), vec))
 
 
 def l2_norm_lit(vec: Sequence[float]) -> Column:
@@ -127,45 +114,24 @@ def l2_norm_lit(vec: Sequence[float]) -> Column:
 
 def l2_norm_fixed(col: Column | str, dim: int) -> Column:
     """Codegen'd norm for a known dimension (same fold order as l2_norm)."""
-    ref = _ref_sql(col)
-    if ref is not None and dim > 0:
-        return F.expr(f"SQRT({_sq_norm_sql(ref, dim)})")
-    col = F.col(col) if isinstance(col, str) else col
-    acc: Column | None = None
-    for i in range(dim):
-        x = col[i].cast("double")
-        term = x * x
-        acc = term if acc is None else acc + term
-    return F.sqrt(acc) if acc is not None else F.lit(0.0)
+    return F.expr(f"SQRT({_sq_norm_sql(_ref_sql(col), dim)})")
 
 
 def cosine_similarity_lit(col: Column | str, vec: Sequence[float]) -> Column:
     """Codegen'd cosine against a literal query vector; bit-equal to
     ``cosine_similarity`` with the same operands."""
     ref = _ref_sql(col)
-    if ref is not None and len(vec) > 0:
-        qn = _dlit(math.sqrt(sq_norm_py(vec)))
-        return F.expr(
-            f"try_divide({_dot_lit_sql(ref, vec)},"
-            f" (SQRT({_sq_norm_sql(ref, len(vec))}) * {qn}))"
-        )
-    return F.try_divide(dot_lit(col, vec), l2_norm_fixed(col, len(vec)) * l2_norm_lit(vec))
+    qn = _dlit(math.sqrt(sq_norm_py(vec)))
+    return F.expr(
+        f"try_divide({_dot_lit_sql(ref, vec)}, (SQRT({_sq_norm_sql(ref, len(vec))}) * {qn}))"
+    )
 
 
 def sq_norm_fixed(col: Column | str, dim: int) -> Column:
     """Codegen'd SUM of squares (no sqrt) for a known dimension — the same
     left-associative fold as DuckDB ``list_dot_product(e, e)``, so the two
     are bit-equal on identical float32→float64 widened inputs."""
-    ref = _ref_sql(col)
-    if ref is not None and dim > 0:
-        return F.expr(_sq_norm_sql(ref, dim))
-    col = F.col(col) if isinstance(col, str) else col
-    acc: Column | None = None
-    for i in range(dim):
-        x = col[i].cast("double")
-        term = x * x
-        acc = term if acc is None else acc + term
-    return acc if acc is not None else F.lit(0.0)
+    return F.expr(_sq_norm_sql(_ref_sql(col), dim))
 
 
 def sq_norm_py(vec: Sequence[float]) -> float:
@@ -205,46 +171,11 @@ def l2_distance(a: Column | str, b: Column | str) -> Column:
 
 def l2_distance_lit(col: Column | str, vec: Sequence[float]) -> Column:
     """Codegen'd Euclidean distance against a literal query vector;
-    same expansion (and fold order) as ``l2_distance``."""
+    same expansion (and fold order) as ``l2_distance``, and the same
+    NULL-propagating clamp (greatest swallows NULLs)."""
     ref = _ref_sql(col)
-    if ref is not None and len(vec) > 0:
-        inner_sql = (
-            f"(({_sq_norm_sql(ref, len(vec))}) + {_dlit(sq_norm_py(vec))})"
-            f" - (2.0D * ({_dot_lit_sql(ref, vec)}))"
-        )
-        return F.expr(
-            f"SQRT(CASE WHEN ({inner_sql}) < 0.0D THEN 0.0D ELSE {inner_sql} END)"
-        )
     inner = (
-        sq_norm_fixed(col, len(vec)) + F.lit(sq_norm_py(vec))
-        - F.lit(2.0) * dot_lit(col, vec)
+        f"(({_sq_norm_sql(ref, len(vec))}) + {_dlit(sq_norm_py(vec))})"
+        f" - (2.0D * ({_dot_lit_sql(ref, vec)}))"
     )
-    # same NULL-propagating clamp as l2_distance (greatest swallows NULLs)
-    return F.sqrt(F.when(inner < F.lit(0.0), F.lit(0.0)).otherwise(inner))
-
-
-def dot_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Codegen'd column×column dot for a known dimension; same
-    left-associative summation order as ``dot`` — bit-equal results."""
-    ra, rb = _ref_sql(a), _ref_sql(b)
-    if ra is not None and rb is not None and dim > 0:
-        return F.expr(_dot_fixed_sql(ra, rb, dim))
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    acc: Column | None = None
-    for i in range(dim):
-        term = a[i].cast("double") * b[i].cast("double")
-        acc = term if acc is None else acc + term
-    return acc if acc is not None else F.lit(0.0)
-
-
-def cosine_similarity_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Codegen'd cosine for a known dimension; bit-equal to
-    ``cosine_similarity``."""
-    ra, rb = _ref_sql(a), _ref_sql(b)
-    if ra is not None and rb is not None and dim > 0:
-        return F.expr(
-            f"try_divide({_dot_fixed_sql(ra, rb, dim)},"
-            f" (SQRT({_sq_norm_sql(ra, dim)}) * SQRT({_sq_norm_sql(rb, dim)})))"
-        )
-    return F.try_divide(dot_fixed(a, b, dim), l2_norm_fixed(a, dim) * l2_norm_fixed(b, dim))
+    return F.expr(f"SQRT(CASE WHEN ({inner}) < 0.0D THEN 0.0D ELSE {inner} END)")

@@ -22,9 +22,14 @@ re-expression is the batch construction the distributed ANN literature uses
 * **Search** is greedy beam search replayed as a FIXED unrolled stage list
   (1 hop at layer 2, 2 at layer 1, 4 at layer 0): each hop expands the beam
   through the layer's edge list (equi-join bounded by ef·M per query),
-  re-scores, and keeps the top-``ef`` per query. Fixed unrolling is what
-  makes the whole search expressible as bounded CTEs for the DuckDB oracle
-  (the k-means/BPE replay pattern).
+  re-scores, and keeps the top-``ef`` per query. :func:`ann_hnsw_sql`
+  renders the whole descent as ONE SQL text over the temp views of a
+  :func:`hnsw_serve_set` — one parse and one analysis per serve, whatever
+  the hop count. Fixed unrolling is also what makes the search expressible
+  as bounded CTEs for the DuckDB oracle (the k-means/BPE replay pattern).
+* **Pair scores** have one source: the SQL text of ``_norm_sql`` and
+  ``_pair_score_sql``. The descent embeds it; the build, repair and the
+  routed exact regime evaluate the same text through ``F.expr``.
 
 Recall on the suite's hash-random embeddings (the worst case — no cluster
 structure): 1.00 / 1.00 / 0.98 @5 at sf0.001/0.01/0.1 with M=12, ef=48
@@ -37,13 +42,15 @@ controlled by the blocking keys exactly like dedup.py's banded LSH join.
 
 from __future__ import annotations
 
+import itertools
 import math
-from collections.abc import Sequence
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
+from typing import NamedTuple, Union
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from vector_mcp_spark.functions.vector import dot
 from vector_mcp_spark.operators.similarity import SCORE_DECIMALS
 from vector_mcp_spark.validation import EngineError
 
@@ -64,42 +71,55 @@ HNSW_UPPER_COARSEN = 4
 #: default hash-bucket count for the second layer-0 blocking family
 HNSW_N_HASH_BUCKETS = 16
 
-
-def _guarded_norm(col: F.Column) -> F.Column:
-    # zero-norm → 1 (the IVF-oracle convention) so pair sims never go NULL
-    n = F.sqrt(dot(col, col))
-    return F.when(n == F.lit(0.0), F.lit(1.0)).otherwise(n)
-
-
 #: metrics the graph family builds and serves under — pgvector's three
 #: operator classes / qdrant's Distance enum (``postgres.py:316-348``,
 #: ``qdrant.py:122-127``); True = higher score is better
 GRAPH_METRICS = {"cosine": True, "dot": True, "l2": False}
 
 
-def _node_norm(col: F.Column, metric: str) -> F.Column:
-    """The per-node norm each metric's pair score consumes: cosine keeps
-    the zero-guarded convention (sims never NULL); l2 uses the RAW norm so
-    ``n² + q² − 2·d·q`` reproduces ``similarity.ann_ivf_topk(metric='l2')``
-    bit-for-bit (sqrt-then-square order preserved); dot never reads it."""
-    if metric == "cosine":
-        return _guarded_norm(col)
-    return F.sqrt(dot(col, col))
+def _dot_sql(a: str, b: str) -> str:
+    """SQL text of functions.vector.dot: zip_with + aggregate sequential
+    fold over double-widened elements (the fold order, and hence every
+    float result, of the DuckDB oracle's ``list_dot_product``)."""
+    da = f"transform({a}, x -> CAST(x AS DOUBLE))"
+    db = f"transform({b}, x -> CAST(x AS DOUBLE))"
+    return f"aggregate(zip_with({da}, {db}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
 
 
-def _pair_score(metric: str, av: F.Column, an: F.Column, bv: F.Column, bn: F.Column) -> F.Column:
+def _norm_sql(col: str, metric: str) -> str:
+    """The per-node norm each metric's pair score consumes: cosine maps a
+    zero norm to 1 (the IVF-oracle convention, so pair sims never go NULL);
+    l2 uses the RAW norm so ``n² + q² − 2·d·q`` reproduces
+    ``similarity.ann_ivf_topk(metric='l2')`` bit-for-bit (sqrt-then-square
+    order preserved); dot never reads it."""
+    n = f"sqrt({_dot_sql(col, col)})"
     if metric == "cosine":
-        return dot(av, bv) / (an * bn)
+        return f"(CASE WHEN {n} = 0.0D THEN 1.0D ELSE {n} END)"
+    return n
+
+
+def _pair_score_sql(metric: str, qv: str, qn: str, v: str, n: str) -> str:
+    d = _dot_sql(qv, v)
+    if metric == "cosine":
+        return f"({d} / ({qn} * {n}))"
     if metric == "dot":
-        return dot(av, bv)
+        return d
     # l2: same expansion + clamp as similarity.ann_ivf_topk(metric='l2').
-    # NOT F.greatest(0, inner): greatest IGNORES nulls, so a NULL inner
+    # NOT greatest(0, inner): greatest IGNORES nulls, so a NULL inner
     # product (mis-sized or missing vector) would score a PERFECT 0.0
-    # distance instead of NULL — the same hole ADVICE r11 found in
-    # l2_distance; the when-clamp propagates NULL and the asc_nulls_last
-    # orderings then bury such rows
-    inner = an * an + bn * bn - F.lit(2.0) * dot(av, bv)
-    return F.sqrt(F.when(inner < F.lit(0.0), F.lit(0.0)).otherwise(inner))
+    # distance instead of NULL — the hole ADVICE r11 found in l2_distance;
+    # the when-clamp propagates NULL and the NULLS LAST orderings then bury
+    # such rows
+    inner = f"(({qn} * {qn}) + ({n} * {n})) - (2.0D * {d})"
+    return f"sqrt(CASE WHEN ({inner}) < 0.0D THEN 0.0D ELSE ({inner}) END)"
+
+
+def _node_norm(col: str, metric: str) -> F.Column:
+    return F.expr(_norm_sql(col, metric))
+
+
+def _pair_score(metric: str, av: str, an: str, bv: str, bn: str) -> F.Column:
+    return F.expr(_pair_score_sql(metric, av, an, bv, bn))
 
 
 def _score_order(metric: str, score: F.Column, tie: F.Column) -> list:
@@ -107,6 +127,11 @@ def _score_order(metric: str, score: F.Column, tie: F.Column) -> list:
     # never outrank a real one (ADVICE r11)
     higher = GRAPH_METRICS[metric]
     return [score.desc() if higher else score.asc_nulls_last(), tie.asc()]
+
+
+def _order_sql(metric: str) -> str:
+    # the SQL twin of _score_order: DESC defaults to NULLS LAST in Spark
+    return "_sm DESC, node ASC" if GRAPH_METRICS[metric] else "_sm ASC NULLS LAST, node ASC"
 
 
 def hnsw_levels(df: DataFrame, id_col: str = "id") -> DataFrame:
@@ -131,10 +156,7 @@ def _top_m(cand: DataFrame, nodes: DataFrame, m: int, metric: str = "cosine") ->
     scored = (
         cand.join(a, "src")
         .join(b, "dst")
-        .withColumn(
-            "_sm",
-            _pair_score(metric, F.col("_av"), F.col("_an"), F.col("_bv"), F.col("_bn")),
-        )
+        .withColumn("_sm", _pair_score(metric, "_av", "_an", "_bv", "_bn"))
     )
     w = Window.partitionBy("src").orderBy(*_score_order(metric, F.col("_sm"), F.col("dst")))
     return (
@@ -172,7 +194,7 @@ def hnsw_build(
             F.col(cluster_col).alias("cluster"),
         ),
         id_col="node",
-    ).withColumn("n", _node_norm(F.col("v"), metric))
+    ).withColumn("n", _node_norm("v", metric))
     # feeds every pair-gen and scoring join below — truncate lineage once
     nodes = nodes.localCheckpoint(eager=True)
 
@@ -250,200 +272,113 @@ def hnsw_build(
     return edges, {"entry": entry, "top_layer": int(top)}
 
 
+#: fresh temp-view names (session-scoped views, so a process-wide counter
+#: keeps them unique across sessions and threads)
+_VIEW_SEQ = itertools.count()
+
+
+def _register(df: DataFrame, kind: str) -> str:
+    name = f"_hnsw_{kind}_{next(_VIEW_SEQ)}"
+    df.createOrReplaceTempView(name)
+    return name
+
+
+@contextmanager
+def temp_views(*frames: DataFrame) -> Iterator[list[str]]:
+    """Register each frame under a fresh temp-view name for the ``with``
+    body — the query and allowed-ids views :func:`ann_hnsw_sql` reads — and
+    drop the views on exit. ``spark.sql`` analyzes its text eagerly, so a
+    DataFrame it returned inside the body still runs after the views are
+    gone."""
+    names = [_register(df, "in") for df in frames]
+    try:
+        yield names
+    finally:
+        for df, name in zip(frames, names):
+            df.sparkSession.catalog.dropTempView(name)
+
+
+class HnswServeSet(NamedTuple):
+    """The query-independent beam working set of one graph index (see
+    :func:`hnsw_serve_set`). Bound to the SparkSession that built it:
+    temp views resolve only there."""
+
+    nodes: DataFrame  # (node, v, n), n the metric's per-node norm
+    edges: DataFrame  # (layer, src, dst)
+    nodes_view: str
+    edges_view: str
+    n_nodes: int
+    broadcast_edges: bool
+    metric: str
+
+    def drop(self) -> None:
+        """Drop the two views (the checkpointed frames go with their last
+        reference)."""
+        for view in (self.nodes_view, self.edges_view):
+            self.nodes.sparkSession.catalog.dropTempView(view)
+
+
+def hnsw_nodes(
+    corpus: DataFrame, id_col: str = "id", emb_col: str = "embedding", metric: str = "cosine"
+) -> DataFrame:
+    """The corpus as the scored side of every descent: (node, v, n), with
+    n the per-node norm ``metric``'s pair score reads."""
+    if metric not in GRAPH_METRICS:
+        raise ValueError(f"unknown metric {metric!r}; one of {sorted(GRAPH_METRICS)}")
+    return corpus.select(
+        F.col(id_col).alias("node"),
+        F.col(emb_col).alias("v"),
+        _node_norm(emb_col, metric).alias("n"),
+    )
+
+
 def hnsw_serve_set(
     corpus: DataFrame,
     edges: DataFrame,
     id_col: str = "id",
     emb_col: str = "embedding",
     metric: str = "cosine",
-) -> tuple[DataFrame, DataFrame]:
-    """Materialize the query-INDEPENDENT beam-serve working set once:
-    ``(nodes, edges)`` with nodes = (node, v, n) carrying the metric's
-    per-node norm, both localCheckpointed. A vector DB holds exactly this
-    in RAM next to the graph; callers that serve many queries against one
-    index build it once and pass it as ``serve_set`` so each serve skips
-    two eager checkpoint jobs (guide §1.2). The frames are bound to the
-    building SparkSession — key any cache by applicationId."""
-    nodes = corpus.select(
-        F.col(id_col).alias("node"),
-        F.col(emb_col).alias("v"),
-        _node_norm(F.col(emb_col), metric).alias("n"),
-    ).localCheckpoint(eager=True)
-    return nodes, edges.localCheckpoint(eager=True)
+) -> HnswServeSet:
+    """Materialize the beam-serve working set of one index once: the
+    corpus as (node, v, n) and the edges, both localCheckpointed and
+    registered as temp views, plus the corpus cardinality. A vector DB
+    holds exactly this in RAM next to the graph; callers that serve many
+    queries against one index keep it (guide §1.2) and render every descent
+    over it with :func:`ann_hnsw_sql`.
 
-
-def ann_hnsw_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    edges: DataFrame,
-    entry: object,
-    k: int,
-    ef: int = 48,
-    hops: tuple[tuple[int, int], ...] = HNSW_HOPS,
-    id_col: str = "id",
-    emb_col: str = "embedding",
-    exclude_self: bool = True,
-    allowed: DataFrame | None = None,
-    metric: str = "cosine",
-    stats: dict | None = None,
-    serve_set: tuple[DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """Greedy beam search over the layered graph: start every query's beam
-    at the shared entry node, descend the fixed ``hops`` schedule, keep the
-    top-``ef`` per query each hop, answer with the final beam's top-``k``.
-    Returns (query_id, rank, neighbor_id, score) like every ANN operator.
-
-    ``stats`` (probe-only — serving callers leave it None) accumulates
-    ``candidate_rows``: the total candidate rows scored across all hops,
-    the beam's REAL index-bounded work metric (≤ stages × ef × (2m+1) per
-    query, independent of corpus size). Counting forces one extra action
-    per hop, so it is strictly a measurement hook.
-
-    ``allowed`` (a one-column id DataFrame) post-filters the final beam
-    before the top-k — the qdrant filtered-search composition in its
-    "plain" (unfiltered-traversal) mode: under selective filters fewer
-    than ``k`` rows may return; raise ``ef`` to deepen the pool, or
-    pre-filter + exact re-rank when selectivity is extreme.
-
-    Each hop is one equi-join of the beam (≤ ef rows/query) against the
-    layer's edge partition (≤ 2m rows/node) plus a per-query top-ef window —
-    bounded work per query per hop, no full-corpus scan after the build.
-    """
-    if metric not in GRAPH_METRICS:
-        raise ValueError(f"unknown metric {metric!r}; one of {sorted(GRAPH_METRICS)}")
-    if serve_set is not None:
-        # query-independent working set prepared ONCE by the caller
-        # (hnsw_serve_set) and reused across serves: skips two eager
-        # checkpoint jobs + their plan analyses per query (measured ~1 s
-        # of pure driver latency per serve at sf0.1 — guide §1.2, don't
-        # recompute what the index already holds)
-        nodes, edges = serve_set
-    else:
-        nodes = corpus.select(
-            F.col(id_col).alias("node"),
-            F.col(emb_col).alias("v"),
-            _node_norm(F.col(emb_col), metric).alias("n"),
-        ).localCheckpoint(eager=True)  # feeds one scoring join per hop
-        edges = edges.localCheckpoint(eager=True)
-
-    # checkpointed too: every hop's rescore joins q, and without a leaf here
-    # each hop would re-scan the query frame's lineage (r13 optimization —
-    # one job now instead of a scan + norm projection per hop)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(emb_col).alias("qv"),
-        _node_norm(F.col(emb_col), metric).alias("qn"),
-    ).localCheckpoint(eager=True)
-    beam = q.select("query_id").withColumn("node", F.lit(entry))
-    # keep-or-expand as ONE equi-join: a self-loop per node makes
-    # beam ⋈ (edges ∪ self) ≡ beam ∪ neighbors(beam) — the union that
-    # previously referenced the beam twice (forcing an eager localCheckpoint
-    # per hop to appease Catalyst's union constraint rewriting) disappears,
-    # so the whole descent plans as ONE action: broadcast exchanges for q
-    # and nodes are REUSED across hops instead of rebuilt per checkpoint job
-    # (r13: 3.9 s → 2.5 s per beam entry at sf0.1, results bit-identical).
-    self_edges = nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-
-    def rescore_topn(cand: DataFrame, n_keep: int) -> DataFrame:
-        scored = (
-            cand.join(q, "query_id")
-            .join(nodes, "node")
-            .withColumn(
-                "_sm",
-                _pair_score(metric, F.col("qv"), F.col("qn"), F.col("v"), F.col("n")),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            *_score_order(metric, F.col("_sm"), F.col("node"))
-        )
-        return scored.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= n_keep)
-
-    first_hop = True
-    for layer, n_hops in hops:
-        e = edges.where(F.col("layer") == layer).select("src", "dst")
-        e_self = e.union(self_edges)
-        for _ in range(n_hops):
-            if first_hop:
-                # Hop 1 is query-INDEPENDENT: every beam is {entry}, so its
-                # expansion is exactly entry's neighbor list on this layer.
-                # Joining a million concurrent beams against the one edge
-                # partition holding src=entry is the known 100 TB hotspot;
-                # instead compute the shared candidate set ONCE (≤ 2m+1
-                # rows) and broadcast-cross it to the queries. Same
-                # candidates per query → bit-identical results.
-                seed = (
-                    e.where(F.col("src") == F.lit(entry))
-                    .select(F.col("dst").alias("node"))
-                    .union(q.select(F.lit(entry).alias("node")).limit(1))
-                    .distinct()
-                )
-                # distinct matches the replaced path's cand.distinct(): a duplicated
-                # query id must not burn beam slots on duplicate candidate rows
-                cand = q.select("query_id").distinct().join(F.broadcast(seed))
-                if stats is not None:
-                    stats["candidate_rows"] = stats.get("candidate_rows", 0) + cand.count()
-                beam = rescore_topn(cand, ef).select("query_id", "node")
-                first_hop = False
-                continue
-            # one equi-join against the self-looped edge partition = the old
-            # beam ∪ neighbors(beam): a beam node with no edges on this layer
-            # survives via its self-loop, exactly like the replaced union
-            cand = (
-                beam.join(e_self, beam["node"] == e_self["src"])
-                .select("query_id", F.col("dst").alias("node"))
-                .distinct()
-            )
-            if stats is not None:
-                cand = cand.localCheckpoint(eager=True)  # count once, score same rows
-                stats["candidate_rows"] = stats.get("candidate_rows", 0) + cand.count()
-            beam = rescore_topn(cand, ef).select("query_id", "node")
-
-    # exclude_self drops a query's own corpus row (queries drawn FROM the
-    # corpus); engine callers pass synthetic query ids NOT in the corpus and
-    # set False so an id-equal document can never be silently excluded
-    if exclude_self:
-        beam = beam.where(F.col("query_id") != F.col("node"))
-    if allowed is not None:
-        # no broadcast hint: the allowed set is FILTER-sized (a broad
-        # predicate can cover half the corpus), not batch-sized — a forced
-        # broadcast would hit the driver/broadcast limits at scale; AQE
-        # still picks broadcast when the set is actually small
-        ids = allowed.select(F.col(allowed.columns[0]).alias("node")).distinct()
-        beam = beam.join(ids, "node", "left_semi")
-    final = rescore_topn(beam, k)
-    return final.select(
-        "query_id",
-        F.col("_rn").cast("int").alias("rank"),
-        F.col("node").alias("neighbor_id"),
-        F.round("_sm", SCORE_DECIMALS).alias("score"),
+    ``broadcast_edges`` is the measured broadcast gate for the descent's
+    per-hop edge-union side (two id columns — the vectors never enter that
+    relation), counted once here: with unknown leaf stats the planner
+    builds the beam side, which is right at scale (ef rows against a huge
+    edge table) but a fresh broadcast stage per hop locally; a set small
+    enough for the session's own threshold hints the edge side instead, so
+    every hop of a layer reuses one broadcast build. A set that outgrows
+    the threshold never hints."""
+    nodes = hnsw_nodes(corpus, id_col, emb_col, metric).localCheckpoint(eager=True)
+    edges = edges.localCheckpoint(eager=True)
+    n_nodes = nodes.count()
+    try:
+        limit = int(nodes.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    except (TypeError, ValueError):
+        limit = 10 * 1024 * 1024
+    return HnswServeSet(
+        nodes, edges, _register(nodes, "nodes"), _register(edges, "edges"), n_nodes,
+        0 <= (n_nodes + edges.count()) * 64 <= limit, metric,
     )
 
 
-# ---------------------------------------------------------------------------
-# Prepared single-query descent (engine serve path, optimization guide §1/§4)
-#
-# ann_hnsw_topk builds the 7-hop descent through ~60 DataFrame
-# transformations, and PySpark analyzes each intermediate Dataset EAGERLY —
-# the analyzer re-walks a growing tree every step, measured ~1.5 s of pure
-# DRIVER time per engine serve (r13 §15: plan-build 1.9 s before serve-set
-# caching; zero active Spark jobs throughout). For the engine's
-# one-literal-vector serves the identical descent renders as ONE SQL text
-# over the serve set registered as temp views: one parse + one analysis of
-# the final tree. Same joins, same HOF dot folds (sequential left fold over
-# double-widened floats), same window order with the same NULL placement,
-# same ROUND — results are bit-identical (pinned by
-# tests/test_engine.py::test_prepared_descent_matches_dataframe_path across
-# metrics/dims/k/ef). The DataFrame path stays for multi-query/DataFrame-
-# query callers (suite entries), whose plans and hashes are untouched.
-# ---------------------------------------------------------------------------
+#: a query batch: literal (id, vector) pairs, or the name of a registered
+#: (query_id, qv) view
+Queries = Union[Sequence[tuple[object, Sequence[float]]], str]
 
 
-def _sql_str_lit(value: object) -> str:
-    """SQL literal for an entry/query id (string ids get escaped+quoted)."""
-    if isinstance(value, bool) or not isinstance(value, (int, float)):
-        s = str(value).replace("\\", "\\\\").replace("'", "\\'")
-        return f"'{s}'"
-    return repr(value)
+def _id_sql(value: object) -> str:
+    """SQL literal of an entry or query id: a string id quoted and escaped,
+    any other id as BIGINT (the suite's vec_id type)."""
+    if isinstance(value, str):
+        return "'{}'".format(value.replace("\\", "\\\\").replace("'", "\\'"))
+    plain = isinstance(value, (int, float)) and not isinstance(value, bool)
+    return f"CAST({repr(value) if plain else _id_sql(str(value))} AS BIGINT)"
 
 
 def _vec_sql(vec: Sequence[float]) -> str:
@@ -458,255 +393,148 @@ def _vec_sql(vec: Sequence[float]) -> str:
     return "CAST(array({}) AS ARRAY<FLOAT>)".format(", ".join(f"{x!r}D" for x in vals))
 
 
-def _dot_sql(a: str, b: str) -> str:
-    """SQL text of functions.vector.dot: zip_with + aggregate sequential
-    fold over double-widened elements — the exact expression the DataFrame
-    path evaluates, so the fold order (and hence every float result) is
-    identical."""
-    da = f"transform({a}, x -> CAST(x AS DOUBLE))"
-    db = f"transform({b}, x -> CAST(x AS DOUBLE))"
-    return f"aggregate(zip_with({da}, {db}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+def _queries_sql(queries: Queries, metric: str) -> str:
+    """SELECT text of the query relation (query_id, qv, qn): a registered
+    view, or literal pairs as an inline VALUES relation. The norm is the
+    node-side expression, so a query drawn from the corpus scores exactly
+    like its own node."""
+    if isinstance(queries, str):
+        src = queries
+    else:
+        if not queries:  # an empty VALUES list is not SQL
+            raise EngineError("collection_vector_schema_mismatch", detail="empty query batch")
+        values = ",\n    ".join(f"({_id_sql(qid)}, {_vec_sql(v)})" for qid, v in queries)
+        src = f"(VALUES\n    {values}) AS t(query_id, qv)"
+    return f"SELECT query_id, qv, {_norm_sql('qv', metric)} AS qn\n  FROM {src}"
 
 
-def _norm_sql(col: str, metric: str) -> str:
-    n = f"sqrt({_dot_sql(col, col)})"
-    if metric == "cosine":
-        # _guarded_norm: zero-norm -> 1 so pair sims never go NULL
-        return f"(CASE WHEN {n} = 0.0D THEN 1.0D ELSE {n} END)"
-    return n
-
-
-def _pair_score_sql(metric: str, qv: str, qn: str, v: str, n: str) -> str:
-    d = _dot_sql(qv, v)
-    if metric == "cosine":
-        return f"({d} / ({qn} * {n}))"
-    if metric == "dot":
-        return d
-    inner = f"(({qn} * {qn}) + ({n} * {n})) - (2.0D * {d})"
-    # when-clamp, not greatest: NULL inner must stay NULL (ADVICE r11)
-    return f"sqrt(CASE WHEN ({inner}) < 0.0D THEN 0.0D ELSE ({inner}) END)"
-
-
-def _order_sql(metric: str) -> str:
-    # l2 ASC NULLS LAST matches asc_nulls_last; DESC defaults to NULLS LAST
-    # in Spark exactly like Column.desc()
-    return "_sm DESC, node ASC" if GRAPH_METRICS[metric] else "_sm ASC NULLS LAST, node ASC"
-
-
-def ann_hnsw_prepared_sql(
-    nodes_view: str,
-    edges_view: str,
+def ann_hnsw_sql(
+    serve_set: HnswServeSet,
     entry: object,
-    question_vec: Sequence[float],
+    queries: Queries,
     k: int,
     ef: int = 48,
-    hops: tuple[tuple[int, int], ...] = HNSW_HOPS,
-    metric: str = "cosine",
-    query_id: object = "__q__",
-    broadcast_edges: bool = False,
-    exclude_self: bool = False,
-) -> str:
-    """Render the full fixed-schedule beam descent for ONE literal query
-    vector as a single SQL text over the registered serve-set views
-    (``nodes_view``: (node, v, n); ``edges_view``: (layer, src, dst), both
-    localCheckpointed by :func:`hnsw_serve_set`). ``spark.sql(text)`` is
-    the whole per-serve driver cost — no per-transform analysis, no q
-    checkpoint job (the query row is a one-row inline relation whose
-    re-evaluation per hop is free). Output schema and values match
-    ``ann_hnsw_topk(..., exclude_self=False)`` exactly."""
-    if metric not in GRAPH_METRICS:
-        raise ValueError(f"unknown metric {metric!r}; one of {sorted(GRAPH_METRICS)}")
-    # the query vector/norm are LITERAL expressions, not a relation: the
-    # per-hop "join q" of the DataFrame path (which exists because there
-    # the queries are a DataFrame) disappears entirely — one join per hop
-    # (beam x self-looped edges) plus one scoring join against nodes. The
-    # norm is the same expression over the same literal array, so qn (and
-    # every score derived from it) is bit-equal to the DataFrame path's.
-    qv = _vec_sql(question_vec)
-    qn = _norm_sql(qv, metric)
-    qid, ent = _sql_str_lit(query_id), _sql_str_lit(entry)
-    score = _pair_score_sql(metric, qv, qn, "nd.v", "nd.n")
-    order = _order_sql(metric)
-
-    def rescore(cand: str, out: str) -> str:
-        # single query => the DataFrame path's PARTITION BY query_id window
-        # is one partition; rows are beam-bounded (<= ef * (2m+1)), so the
-        # single-partition sort is tiny at any corpus scale
-        return (
-            f"{out} AS (\n"
-            f"  SELECT node, _sm, row_number() OVER (ORDER BY {order}) AS _rn\n"
-            f"  FROM (SELECT nd.node, {score} AS _sm\n"
-            f"        FROM {cand} c JOIN {nodes_view} nd ON c.node = nd.node)\n"
-            f")"
-        )
-
-    ctes = [
-        # hop 1 is query-independent: entry's neighbor list on the top
-        # schedule layer plus the entry itself (same rows as the DataFrame
-        # path's broadcast seed)
-        (
-            "cand_1 AS (\n"
-            "  SELECT DISTINCT node FROM (\n"
-            f"    SELECT dst AS node FROM {edges_view}"
-            f" WHERE layer = {int(hops[0][0])} AND src = {ent}\n"
-            f"    UNION ALL SELECT {ent} AS node\n"
-            "  )\n"
-            ")"
-        ),
-        rescore("cand_1", "sc_1"),
-        f"beam_1 AS (SELECT node FROM sc_1 WHERE _rn <= {int(ef)})",
-    ]
-    i = 1
-    first_hop = True
-    for layer, n_hops in hops:
-        for _ in range(n_hops):
-            if first_hop:
-                first_hop = False
-                continue  # the seed hop above
-            i += 1
-            # self-looped edge partition: beam ∪ neighbors(beam) as one
-            # equi-join, exactly like the DataFrame path. With unknown
-            # leaf stats the planner builds the beam side — correct at
-            # scale (ef rows vs a huge edge table) but a fresh
-            # non-reusable broadcast stage per hop locally; when the
-            # caller MEASURED the serve set small enough to fit the
-            # session broadcast threshold (the bcast_if_fits gate),
-            # hinting the edge-union side instead lets every hop of a
-            # layer REUSE one broadcast build.
-            hint = "/*+ BROADCAST(e) */ " if broadcast_edges else ""
-            ctes.append(
-                f"cand_{i} AS (\n"
-                f"  SELECT {hint}DISTINCT e.dst AS node\n"
-                f"  FROM beam_{i - 1} b JOIN (\n"
-                f"    SELECT src, dst FROM {edges_view} WHERE layer = {int(layer)}\n"
-                f"    UNION ALL SELECT node AS src, node AS dst FROM {nodes_view}\n"
-                "  ) e ON b.node = e.src\n"
-                ")"
-            )
-            ctes.append(rescore(f"cand_{i}", f"sc_{i}"))
-            ctes.append(f"beam_{i} AS (SELECT node FROM sc_{i} WHERE _rn <= {int(ef)})")
-    last = f"beam_{i}"
-    if exclude_self:
-        # queries drawn FROM the corpus: drop the query's own row, exactly
-        # like the DataFrame path's query_id != node filter
-        ctes.append(f"beam_f AS (SELECT node FROM {last} WHERE node != {qid})")
-        last = "beam_f"
-    ctes.append(rescore(last, "final"))
-    body = ",\n".join(ctes)
-    return (
-        f"WITH {body}\n"
-        f"SELECT {qid} AS query_id, CAST(_rn AS INT) AS rank, node AS neighbor_id,\n"
-        f"       ROUND(_sm, {SCORE_DECIMALS}) AS score\n"
-        f"FROM final WHERE _rn <= {int(k)}"
-    )
-
-
-def ann_hnsw_multi_prepared_sql(
-    nodes_view: str,
-    edges_view: str,
-    entry: object,
-    queries: Sequence[tuple[object, Sequence[float]]],
-    k: int,
-    ef: int = 48,
-    hops: tuple[tuple[int, int], ...] = HNSW_HOPS,
-    metric: str = "cosine",
     exclude_self: bool = True,
-    broadcast_edges: bool = False,
-    id_sql_type: str = "BIGINT",
+    allowed_view: str | None = None,
 ) -> str:
-    """Multi-query form of :func:`ann_hnsw_prepared_sql` for callers whose
-    query set is a known literal batch (the suite's fixed vec_id < NQ
-    slice): the queries become an inline VALUES relation with the norm
-    computed by the same expression the DataFrame path evaluates, and the
-    descent renders as one SQL text — one parse + one analysis instead of
-    ~60 eagerly-analyzed DataFrame steps and a per-call query checkpoint.
-    Windows keep their real ``PARTITION BY query_id``; the seed cross-join
-    broadcasts the ≤ 2m+1-row entry neighborhood exactly like the
-    DataFrame path's ``F.broadcast(seed)``. Output schema and values match
-    ``ann_hnsw_topk`` (``exclude_self`` honored) bit-for-bit — pinned by
-    tests/test_engine.py::test_prepared_descent_matches_dataframe_path and
-    the full oracle replay of every converted suite entry."""
-    if metric not in GRAPH_METRICS:
-        raise ValueError(f"unknown metric {metric!r}; one of {sorted(GRAPH_METRICS)}")
-    if not queries:  # an empty VALUES list is not SQL
-        raise EngineError("collection_vector_schema_mismatch", detail="empty query batch")
+    """The beam descent as one SQL text over ``serve_set``'s views: start
+    every query's beam at the shared ``entry`` node, descend the fixed
+    :data:`HNSW_HOPS` schedule keeping the top-``ef`` per query each hop,
+    and answer with the final beam's top-``k`` as (query_id, rank,
+    neighbor_id, score), scores rounded to ``SCORE_DECIMALS`` — the shape
+    of every ANN operator. ``spark.sql(text)`` is the whole driver cost of
+    a serve: one parse and one analysis, no per-hop job.
 
-    def id_lit(v: object) -> str:
-        s = _sql_str_lit(v)
-        return s if isinstance(v, str) else f"CAST({s} AS {id_sql_type})"
+    ``queries`` is a list of literal (id, vector) pairs (an inline VALUES
+    relation, or for a single query the literal itself; NaN/Inf vectors
+    and an empty batch refuse with ``collection_vector_schema_mismatch``)
+    or the name of a registered (query_id, qv) view for DataFrame-sourced
+    batches (:func:`temp_views`).
 
-    values = ",\n    ".join(f"({id_lit(qid)}, {_vec_sql(v)})" for qid, v in queries)
-    ent = id_lit(entry)
-    score = _pair_score_sql(metric, "q.qv", "q.qn", "nd.v", "nd.n")
+    ``exclude_self`` drops a query's own corpus row (queries drawn FROM the
+    corpus); callers with synthetic query ids set False, so an id-equal
+    document can never be silently excluded.
+
+    ``allowed_view`` (a one-column view of ids) post-filters the final
+    beam before the top-k — the qdrant filtered-search composition in its
+    "plain" (unfiltered-traversal) mode: under selective filters fewer than
+    ``k`` rows may return; raise ``ef`` to deepen the pool, or route to the
+    exact regime (:func:`ann_filtered_topk_routed`).
+
+    Each hop is one equi-join of the beam (≤ ef rows/query) against the
+    layer's self-looped edge partition (≤ 2m+1 rows/node) plus a per-query
+    top-ef window — bounded work per query per hop, no corpus scan."""
+    metric = serve_set.metric
+    nodes, edges = serve_set.nodes_view, serve_set.edges_view
+    ent = _id_sql(entry)
     order = _order_sql(metric)
-    ehint = "/*+ BROADCAST(e) */ " if broadcast_edges else ""
+    ehint = "/*+ BROADCAST(e) */ " if serve_set.broadcast_edges else ""
+    if not isinstance(queries, str) and len(queries) == 1:
+        # one literal query needs no query relation: it scores against its
+        # own literal (no per-hop join with q, each a broadcast the driver
+        # builds), its id joins the rows only at the end, and its
+        # ≤ ef·(2m+1) rows sort in one partition instead of hash-shuffling
+        # on query_id every hop. Same expression over the same float32
+        # values, so every score is bit-equal to the batch form.
+        (qid, vec), = queries
+        qv, qid = _vec_sql(vec), _id_sql(qid)
+        score = _pair_score_sql(metric, qv, _norm_sql(qv, metric), "nd.v", "nd.n")
+        key = qjoin = ""
+        own, out_id = f"node != {qid}", f"{qid} AS query_id"
+        head = ["cand_1 AS (SELECT node FROM seed)"]
+    else:
+        score = _pair_score_sql(metric, "q.qv", "q.qn", "nd.v", "nd.n")
+        key, qjoin = "query_id, ", "JOIN q ON c.query_id = q.query_id\n        "
+        own, out_id = "query_id != node", "query_id"
+        # the seed is computed once (≤ 2m+1 rows) and broadcast-crossed to
+        # the queries; DISTINCT ids, so a duplicated id must not burn beam
+        # slots on duplicate candidates
+        head = [
+            f"q AS (\n  {_queries_sql(queries, metric)}\n)",
+            "cand_1 AS (SELECT /*+ BROADCAST(s) */ b.query_id, s.node\n"
+            "           FROM (SELECT DISTINCT query_id FROM q) b CROSS JOIN seed s)",
+        ]
+    window = f"PARTITION BY query_id ORDER BY {order}" if key else f"ORDER BY {order}"
 
     def rescore(cand: str, out: str) -> str:
+        # nd.node, not c.node: taking the id from the leaf view keeps the
+        # optimizer from carrying join constraints down the whole hop chain
+        # (measured 0.1-0.6 s less driver time per descent, 4 cores)
         return (
             f"{out} AS (\n"
-            f"  SELECT query_id, node, _sm,\n"
-            f"         row_number() OVER (PARTITION BY query_id ORDER BY {order}) AS _rn\n"
-            f"  FROM (SELECT c.query_id, c.node, {score} AS _sm\n"
-            f"        FROM {cand} c JOIN q ON c.query_id = q.query_id\n"
-            f"        JOIN {nodes_view} nd ON c.node = nd.node)\n"
+            f"  SELECT {key}node, _sm, row_number() OVER ({window}) AS _rn\n"
+            f"  FROM (SELECT {key and 'c.' + key}nd.node, {score} AS _sm\n"
+            f"        FROM {cand} c {qjoin}JOIN {nodes} nd ON c.node = nd.node)\n"
             f")"
         )
 
+    layers = [layer for layer, n_hops in HNSW_HOPS for _ in range(n_hops)]
     ctes = [
-        (
-            "q AS (\n"
-            f"  SELECT query_id, qv, {_norm_sql('qv', metric)} AS qn\n"
-            f"  FROM (VALUES\n    {values}) AS t(query_id, qv)\n"
-            ")"
-        ),
+        # hop 1 is query-independent: every beam is {entry}, so its
+        # expansion is entry's neighbor list on the top layer plus entry
+        # itself — instead of joining every beam against the one edge
+        # partition holding src = entry (the known 100 TB hotspot)
         (
             "seed AS (\n"
             "  SELECT DISTINCT node FROM (\n"
-            f"    SELECT dst AS node FROM {edges_view}"
-            f" WHERE layer = {int(hops[0][0])} AND src = {ent}\n"
+            f"    SELECT dst AS node FROM {edges} WHERE layer = {layers[0]} AND src = {ent}\n"
             f"    UNION ALL SELECT {ent} AS node\n"
             "  )\n"
             ")"
         ),
-        (
-            "cand_1 AS (SELECT /*+ BROADCAST(s) */ b.query_id, s.node\n"
-            "           FROM (SELECT DISTINCT query_id FROM q) b CROSS JOIN seed s)"
-        ),
+        *head,
         rescore("cand_1", "sc_1"),
-        f"beam_1 AS (SELECT query_id, node FROM sc_1 WHERE _rn <= {int(ef)})",
+        f"beam_1 AS (SELECT {key}node FROM sc_1 WHERE _rn <= {int(ef)})",
     ]
-    i = 1
-    first_hop = True
-    for layer, n_hops in hops:
-        for _ in range(n_hops):
-            if first_hop:
-                first_hop = False
-                continue  # the seed hop above
-            i += 1
-            ctes.append(
+    for i, layer in enumerate(layers[1:], start=2):
+        # keep-or-expand as ONE equi-join: a self-loop per node makes
+        # beam ⋈ (edges ∪ self) ≡ beam ∪ neighbors(beam), so a beam node
+        # with no edges on this layer survives via its self-loop
+        ctes += [
+            (
                 f"cand_{i} AS (\n"
-                f"  SELECT {ehint}DISTINCT b.query_id, e.dst AS node\n"
+                f"  SELECT {ehint}DISTINCT {key and 'b.' + key}e.dst AS node\n"
                 f"  FROM beam_{i - 1} b JOIN (\n"
-                f"    SELECT src, dst FROM {edges_view} WHERE layer = {int(layer)}\n"
-                f"    UNION ALL SELECT node AS src, node AS dst FROM {nodes_view}\n"
+                f"    SELECT src, dst FROM {edges} WHERE layer = {layer}\n"
+                f"    UNION ALL SELECT node AS src, node AS dst FROM {nodes}\n"
                 "  ) e ON b.node = e.src\n"
                 ")"
-            )
-            ctes.append(rescore(f"cand_{i}", f"sc_{i}"))
-            ctes.append(
-                f"beam_{i} AS (SELECT query_id, node FROM sc_{i} WHERE _rn <= {int(ef)})"
-            )
-    last = f"beam_{i}"
-    if exclude_self:
-        ctes.append(
-            f"beam_f AS (SELECT query_id, node FROM {last} WHERE query_id != node)"
-        )
+            ),
+            rescore(f"cand_{i}", f"sc_{i}"),
+            f"beam_{i} AS (SELECT {key}node FROM sc_{i} WHERE _rn <= {int(ef)})",
+        ]
+    last = f"beam_{len(layers)}"
+    keep = ([own] if exclude_self else []) + (
+        [f"node IN (SELECT * FROM {allowed_view})"] if allowed_view is not None else []
+    )
+    if keep:
+        ctes.append(f"beam_f AS (SELECT {key}node FROM {last} WHERE {' AND '.join(keep)})")
         last = "beam_f"
     ctes.append(rescore(last, "final"))
     body = ",\n".join(ctes)
     return (
         f"WITH {body}\n"
-        f"SELECT query_id, CAST(_rn AS INT) AS rank, node AS neighbor_id,\n"
+        f"SELECT {out_id}, CAST(_rn AS INT) AS rank, node AS neighbor_id,\n"
         f"       ROUND(_sm, {SCORE_DECIMALS}) AS score\n"
         f"FROM final WHERE _rn <= {int(k)}"
     )
@@ -729,8 +557,9 @@ def hnsw_repair(
     collection can be served again without a full rebuild:
 
     * **Search phase**: every new node beam-descends the FROZEN graph for
-      its ``ef`` nearest old nodes (one :func:`ann_hnsw_topk` job — cost is
-      batch × hops, independent of corpus size).
+      its ``ef`` nearest old nodes (one :func:`ann_hnsw_sql` descent over a
+      serve set of the old corpus — cost is batch × hops, independent of
+      corpus size).
     * **Batch-internal candidates**: hash-block pairs among the new nodes
       (expected block ≈ :data:`HNSW_BLOCK_CAP`, so Σ|block|² stays linear
       in the batch) — a batch of mutually-near vectors still interconnects.
@@ -751,21 +580,23 @@ def hnsw_repair(
             new_vecs.select(F.col(id_col).alias("node"), F.col(emb_col).alias("v")),
             id_col="node",
         )
-        .withColumn("n", _node_norm(F.col("v"), metric))
+        .withColumn("n", _node_norm("v", metric))
         .localCheckpoint(eager=True)
     )
-    old_nodes = hnsw_levels(
-        old_vecs.select(F.col(id_col).alias("node"), F.col(emb_col).alias("v")),
-        id_col="node",
-    ).withColumn("n", _node_norm(F.col("v"), metric))
+    ss = hnsw_serve_set(old_vecs, edges, id_col=id_col, emb_col=emb_col, metric=metric)
+    queries = new_vecs.select(F.col(id_col).alias("query_id"), F.col(emb_col).alias("qv"))
+    try:
+        with temp_views(queries) as (query_view,):
+            beam = ss.nodes.sparkSession.sql(
+                ann_hnsw_sql(ss, entry, query_view, k=ef, ef=ef, exclude_self=False)
+            ).select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
+    finally:
+        ss.drop()
     # feeds the connect-phase scoring joins (levels of OLD candidates are
     # re-derived from the same sha draw — no persisted level state needed)
-    all_nodes = old_nodes.unionByName(new_nodes).localCheckpoint(eager=True)
-
-    beam = ann_hnsw_topk(
-        new_vecs, old_vecs, edges, entry, k=ef, ef=ef,
-        id_col=id_col, emb_col=emb_col, exclude_self=False, metric=metric,
-    ).select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
+    all_nodes = (
+        hnsw_levels(ss.nodes, id_col="node").unionByName(new_nodes).localCheckpoint(eager=True)
+    )
 
     n_new = new_nodes.count()
     # ceil, matching the build's sliver math: floor would leave any batch
@@ -795,10 +626,7 @@ def hnsw_repair(
             ),
             "dst",
         )
-        .withColumn(
-            "_sm",
-            _pair_score(metric, F.col("_av"), F.col("_an"), F.col("_bv"), F.col("_bn")),
-        )
+        .withColumn("_sm", _pair_score(metric, "_av", "_an", "_bv", "_bn"))
         .localCheckpoint(eager=True)  # feeds the three per-layer windows
     )
     out = None
@@ -826,85 +654,65 @@ def hnsw_repair(
 
 
 def ann_filtered_topk_routed(
-    queries: DataFrame,
-    corpus: DataFrame,
-    edges: DataFrame,
+    nodes: DataFrame,
+    serve_set: Callable[[], HnswServeSet],
     entry: object,
+    queries: Queries,
     allowed: DataFrame,
     k: int,
+    n_total: int,
+    metric: str = "cosine",
     ef: int = 48,
-    id_col: str = "id",
-    emb_col: str = "embedding",
     exclude_self: bool = True,
     selectivity_threshold: float = 0.25,
-    n_total: int | None = None,
-    metric: str = "cosine",
-    serve_set: tuple[DataFrame, DataFrame] | None = None,
 ) -> tuple[DataFrame, str]:
     """Selectivity-routed filtered ANN — the composition qdrant's query
     planner actually performs for filter+vector queries (its cardinality
     estimator picks between a filtered exact scan and the HNSW traversal;
     ``vector_mcp/vectordb/qdrant.py`` delegates to that planner): when the
-    payload predicate is SELECTIVE (|allowed| / |corpus| below the
-    threshold), pre-filter and exact-rank — the filter prunes the scan and
-    the true top-k of the allowed set always comes back; when it is BROAD,
-    beam-search the graph and post-filter the final beam — the traversal
-    cost is independent of the (nearly useless) filter.
+    payload predicate is SELECTIVE (|allowed| / ``n_total`` below the
+    threshold), pre-filter and exact-rank ``nodes`` (:func:`hnsw_nodes`
+    under ``metric``) — the filter prunes the scan and the true top-k of
+    the allowed set always comes back; when it is BROAD, beam-search the
+    graph of ``serve_set()`` and post-filter the final beam — the traversal
+    cost is independent of the (nearly useless) filter. The serve set is
+    fetched only on the graph route, so an exact-routed query never
+    materializes one.
 
-    Returns ``(result, regime)`` with regime ``"exact"`` or ``"graph"`` so
-    callers and tests can pin the routing decision. Both regimes emit the
-    same shape as :func:`ann_hnsw_topk`: (query_id, rank, neighbor_id,
-    score), scores rounded to ``SCORE_DECIMALS``, self-matches excluded
-    when ``exclude_self``.
+    ``queries`` takes the two forms of :func:`ann_hnsw_sql`; ``allowed`` is
+    a one-column id DataFrame. Returns ``(result, regime)`` with regime
+    ``"exact"`` or ``"graph"`` so callers and tests can pin the routing
+    decision. Both regimes emit the same shape as :func:`ann_hnsw_sql`.
 
     Cost of the estimate: one driver-side count of the ``allowed`` side (a
-    pushed-down metadata predicate — a row-group-pruned count at scale).
-    Callers that already know the corpus cardinality (the engine records
-    it in the index manifest at build time) pass ``n_total`` so a served
-    query never pays a corpus-wide count; without it the estimate falls
-    back to ``corpus.count()``. At 100 TB the exact branch is a broadcast
-    of the bounded query batch against the FILTERED corpus scan (predicate
-    reaches parquet), and the graph branch touches only beam-frontier edge
-    partitions.
+    pushed-down metadata predicate — a row-group-pruned count at scale);
+    callers pass the corpus cardinality they already hold (the engine's
+    index manifest, a serve set's count). At 100 TB the exact branch is a
+    broadcast of the bounded query batch against the FILTERED corpus, and
+    the graph branch touches only beam-frontier edge partitions.
     """
-    n_total = corpus.count() if n_total is None else int(n_total)
-    n_allowed = allowed.count()
-    sel = (n_allowed / n_total) if n_total else 0.0
+    spark = nodes.sparkSession
+    sel = (allowed.count() / n_total) if n_total else 0.0
+    # no broadcast hint on the allowed side in either regime: the set is
+    # FILTER-sized (a broad predicate covers half the corpus, and even the
+    # selective regime's set scales with the corpus — only its FRACTION is
+    # bounded); AQE broadcasts it when it is actually small
+    allowed_ids = allowed.select(F.col(allowed.columns[0]).alias("node"))
     if sel >= selectivity_threshold:
-        return (
-            ann_hnsw_topk(
-                queries, corpus, edges, entry, k=k, ef=ef, id_col=id_col,
-                emb_col=emb_col, exclude_self=exclude_self, allowed=allowed,
-                metric=metric, serve_set=serve_set,
-            ),
-            "graph",
-        )
-    # no broadcast hint (same reasoning as the graph branch): even the
-    # selective regime's allowed set scales with the corpus, only its
-    # FRACTION is bounded; AQE broadcasts it when it is actually small
-    allowed_ids = allowed.select(F.col(allowed.columns[0]).alias("node")).distinct()
-    # the serve set's nodes frame carries exactly the (node, v, n) this
-    # branch would project — reuse it so the exact regime also skips the
-    # corpus re-projection (identical values by construction)
-    base_nodes = (
-        serve_set[0]
-        if serve_set is not None
-        else corpus.select(
-            F.col(id_col).alias("node"),
-            F.col(emb_col).alias("v"),
-            _node_norm(F.col(emb_col), metric).alias("n"),
-        )
-    )
-    nodes = base_nodes.join(allowed_ids, "node", "left_semi")
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(emb_col).alias("qv"),
-        _node_norm(F.col(emb_col), metric).alias("qn"),
-    )
+        with temp_views(allowed_ids) as (allowed_view,):
+            hits = spark.sql(
+                ann_hnsw_sql(
+                    serve_set(), entry, queries, k, ef=ef, exclude_self=exclude_self,
+                    allowed_view=allowed_view,
+                )
+            )
+        return hits, "graph"
     # bounded broadcast cross join: |queries| ≤ the caller's batch, never
     # corpus-sized — the same shape as semantic_topk_multi's scorer
-    scored = nodes.join(F.broadcast(q)).withColumn(
-        "_sm", _pair_score(metric, F.col("qv"), F.col("qn"), F.col("v"), F.col("n"))
+    scored = (
+        nodes.join(allowed_ids.distinct(), "node", "left_semi")
+        .join(F.broadcast(spark.sql(_queries_sql(queries, metric))))
+        .withColumn("_sm", _pair_score(metric, "qv", "qn", "v", "n"))
     )
     if exclude_self:
         scored = scored.where(F.col("query_id") != F.col("node"))

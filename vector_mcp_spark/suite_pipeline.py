@@ -13,6 +13,10 @@ operator.
 
 from __future__ import annotations
 
+import functools
+import hashlib
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1147,13 +1151,34 @@ def q_embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cache keyed by corpus on first use, and the declared query measures search.
 
 
-def _index_cache(sf_dir: str, name: str) -> str:
-    import os
+@functools.lru_cache(maxsize=1)
+def _builder_digest() -> str:
+    """sha256 over the source of the modules that build the cached indexes
+    (``operators/`` and ``functions/``), read once per process."""
+    pkg = Path(__file__).resolve().parent
+    h = hashlib.sha256()
+    for p in sorted([*(pkg / "operators").glob("*.py"), *(pkg / "functions").glob("*.py")]):
+        h.update(p.name.encode())
+        h.update(p.read_bytes())
+    return h.hexdigest()
 
+
+def _index_cache(sf_dir: str, name: str, table: str = "embeddings") -> str:
+    """Directory of one cached index, ``.tmp/<name>_<key>_<sf_dir base
+    name>``. The key digests the input table's resolved path and file stats
+    (size, mtime) plus the building modules' source, so a different table
+    under the same base name, or a change to the build code, builds afresh
+    instead of reusing a stale index."""
+    src = Path(sf_dir, f"{table}.parquet").resolve()
+    files = [src] if src.is_file() else sorted(p for p in src.rglob("*") if p.is_file())
+    h = hashlib.sha256(_builder_digest().encode())
+    h.update(str(src).encode())
+    for p in files:
+        st = p.stat()
+        h.update(f"{p}:{st.st_size}:{st.st_mtime_ns}".encode())
     sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    return os.path.abspath(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", ".tmp", f"{name}_{sf_tag}")
-    )
+    cache = Path(__file__).resolve().parent.parent / ".tmp"
+    return str(cache / f"{name}_{h.hexdigest()[:16]}_{sf_tag}")
 
 
 def _ann_lsh_oracle() -> str:
@@ -2712,16 +2737,19 @@ def _hnsw_index(spark: SparkSession, sf_dir: str):
     return spark.read.parquet(edges_path), meta
 
 
-# Process-cached beam-serve working sets: (nodes, edges) localCheckpointed
-# ONCE per (session, sf, metric) — the in-RAM serve state a vector DB keeps
-# next to its persisted graph. This caches INDEX frames (query inputs),
-# never query results; every serve still executes its full descent.
+# Process-cached beam-serve working sets (graph_ann.HnswServeSet) per
+# (session, sf, metric) — the in-RAM serve state a vector DB keeps next to
+# its persisted graph. This caches INDEX frames (query inputs), never query
+# results; every serve still executes its full descent.
 _HNSW_SERVE_SETS: dict = {}
 
 
 def _hnsw_serve(spark: SparkSession, sf_dir: str, metric: str = "cosine"):
-    """(serve_set, meta) for the shared graph index of ``metric``."""
-    key = (spark.sparkContext.applicationId, sf_dir, metric)
+    """(serve_set, meta) for the shared graph index of ``metric``. Keyed by
+    the session object, because the serve set's temp views resolve only in
+    the session that registered them; the cached frames hold that session,
+    so its id is never reused while the entry lives."""
+    key = (id(spark), sf_dir, metric)
     hit = _HNSW_SERVE_SETS.get(key)
     if hit is not None:
         return hit
@@ -2735,33 +2763,12 @@ def _hnsw_serve(spark: SparkSession, sf_dir: str, metric: str = "cosine"):
     edges, meta = index_fn(spark, sf_dir)
     embs = load(spark, sf_dir, "embeddings")
     ss = hnsw_serve_set(embs, edges, id_col="vec_id", emb_col="embedding", metric=metric)
-    # corpus cardinality, counted once off the materialized nodes frame —
-    # the number the engine's index manifest records at build time; routed
-    # callers read it instead of running corpus.count() per query
-    meta = dict(meta)
-    meta.setdefault("n_total", ss[0].count())
-    # prepared-descent serve state (r14): temp views the one-SQL-text beam
-    # descent references, and the measured broadcast gate for its per-hop
-    # edge-union side (two id columns; counted once per build — at a scale
-    # where the union outgrows the session threshold the gate never fires
-    # and the ef-bounded beam stays the join's build side)
-    sf_tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_")
-    nodes_view = f"_hnsw_suite_nodes_{sf_tag}_{metric}"
-    edges_view = f"_hnsw_suite_edges_{sf_tag}_{metric}"
-    ss[0].createOrReplaceTempView(nodes_view)
-    ss[1].createOrReplaceTempView(edges_view)
-    try:
-        limit = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except (TypeError, ValueError):
-        limit = 10 * 1024 * 1024
-    meta["views"] = (nodes_view, edges_view)
-    meta["bcast_edges"] = 0 <= (meta["n_total"] + ss[1].count()) * 64 <= limit
     _HNSW_SERVE_SETS[key] = (ss, meta)
     return ss, meta
 
 
 # The suite's fixed literal query batch (vec_id < _HNSW_NQ), collected once
-# per (session, sf): INPUT vectors for the prepared descent SQL — the same
+# per (session, sf): INPUT vectors for the descent SQL's VALUES — the same
 # fixture-cache pattern as the serve sets (never results; every entry still
 # executes its full descent over them).
 _HNSW_QUERY_LITS: dict = {}
@@ -2782,25 +2789,31 @@ def _hnsw_query_lits(spark: SparkSession, sf_dir: str, max_id: int):
     return hit
 
 
+def _hnsw_beam(
+    spark: SparkSession, sf_dir: str, n_queries: int, metric: str = "cosine",
+    allowed_view: str | None = None,
+) -> DataFrame:
+    """The suite's beam descent: vec_id < ``n_queries`` descend the shared
+    graph index of ``metric`` as one SQL text (self excluded; top-_HNSW_K
+    at ef=_HNSW_EF), optionally post-filtered by ``allowed_view``."""
+    from vector_mcp_spark.operators.graph_ann import ann_hnsw_sql
+
+    ss, meta = _hnsw_serve(spark, sf_dir, metric)
+    return spark.sql(
+        ann_hnsw_sql(
+            ss, meta["entry"], _hnsw_query_lits(spark, sf_dir, n_queries),
+            k=_HNSW_K, ef=_HNSW_EF, allowed_view=allowed_view,
+        )
+    )
+
+
 @register("ann_hnsw_topk", _hnsw_oracle(), "similarity", "pipeline")
 def q_ann_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HNSW-style graph ANN over the shared ivf_16 coarse quantizer: the
     layered neighbor graph is built once (cached like the IVF/PQ indexes),
     queries descend it with a fixed beam schedule. Recall@5 vs the exact
     scorer is gated ≥ 0.85 in tools/recall_report.py / test_similarity."""
-    from vector_mcp_spark.operators.graph_ann import ann_hnsw_multi_prepared_sql
-
-    _, meta = _hnsw_serve(spark, sf_dir)
-    # prepared descent (r14): identical joins/folds/ordering to
-    # ann_hnsw_topk rendered as ONE SQL text over the serve-set views —
-    # one parse+analysis instead of ~60 eagerly-analyzed DataFrame steps
-    # (bit-equal by the equality test and the full oracle replay)
-    return spark.sql(
-        ann_hnsw_multi_prepared_sql(
-            *meta["views"], meta["entry"], _hnsw_query_lits(spark, sf_dir, _HNSW_NQ),
-            k=_HNSW_K, ef=_HNSW_EF, broadcast_edges=meta["bcast_edges"],
-        )
-    )
+    return _hnsw_beam(spark, sf_dir, _HNSW_NQ)
 
 
 # -- hashed-n-gram linear quality/domain classifier ----------------------------
@@ -2998,21 +3011,17 @@ _HNSW_FILT_SQL = (
 )
 def q_ann_hnsw_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered graph-ANN (the qdrant filter+vector composition, plain
-    mode): the beam descends the SAME cached index as ann_hnsw_topk, the
-    payload predicate (even label) post-filters the final beam before the
-    top-k — one broadcast semi-join, no second traversal. Selective
+    mode): the beam descends the SAME cached index as the ann_hnsw_topk
+    entry, the payload predicate (even label) post-filters the final beam
+    before the top-k — one semi-join, no second traversal. Selective
     filters may return < k rows per query; the exact-path twin is
     semantic_filtered_topk."""
-    from vector_mcp_spark.operators.graph_ann import ann_hnsw_topk
+    from vector_mcp_spark.operators.graph_ann import temp_views
 
     embs = load(spark, sf_dir, "embeddings")
-    serve_set, meta = _hnsw_serve(spark, sf_dir)
-    queries = embs.where(F.col("vec_id") < _HNSW_NQ)
     allowed = embs.where(F.col("label") % 2 == 0).select("vec_id")
-    return ann_hnsw_topk(
-        queries, embs, None, meta["entry"], k=_HNSW_K, ef=_HNSW_EF,
-        id_col="vec_id", allowed=allowed, serve_set=serve_set,
-    )
+    with temp_views(allowed) as (allowed_view,):
+        return _hnsw_beam(spark, sf_dir, _HNSW_NQ, allowed_view=allowed_view)
 
 
 # -- selectivity-routed filtered ANN (qdrant query-planner composition) -------
@@ -3058,20 +3067,17 @@ def q_ann_filtered_routed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_mcp_spark.operators.graph_ann import ann_filtered_topk_routed
 
     embs = load(spark, sf_dir, "embeddings")
-    serve_set, meta = _hnsw_serve(spark, sf_dir)
-    edges = None  # both routes consume the cached serve set
-    queries = embs.where(F.col("vec_id") < _HNSW_NQ)
+    ss, meta = _hnsw_serve(spark, sf_dir)
+    queries = _hnsw_query_lits(spark, sf_dir, _HNSW_NQ)
     selective = embs.where((F.col("label") == 3) & (F.col("vec_id") % 2 == 0)).select("vec_id")
     broad = embs.where(F.col("label") % 2 == 0).select("vec_id")
-    kw = dict(
-        k=_HNSW_K, ef=_HNSW_EF, id_col="vec_id", serve_set=serve_set,
-        n_total=meta["n_total"],
-    )
     a, regime_a = ann_filtered_topk_routed(
-        queries, embs, edges, meta["entry"], selective, **kw
+        ss.nodes, lambda: ss, meta["entry"], queries, selective, _HNSW_K, ss.n_nodes,
+        ef=_HNSW_EF,
     )
     b, regime_b = ann_filtered_topk_routed(
-        queries, embs, edges, meta["entry"], broad, **kw
+        ss.nodes, lambda: ss, meta["entry"], queries, broad, _HNSW_K, ss.n_nodes,
+        ef=_HNSW_EF,
     )
     if (regime_a, regime_b) != ("exact", "graph"):
         raise AssertionError(f"selectivity routing regressed: {(regime_a, regime_b)}")
@@ -3453,15 +3459,7 @@ def q_ann_hnsw_dot_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector_ip_ops)`` serving route, completing the qdrant Distance enum
     (reference vector_mcp/vectordb/qdrant.py:122-127) across the persisted
     graph families; fully value-oracled like the cosine and l2 twins."""
-    from vector_mcp_spark.operators.graph_ann import ann_hnsw_multi_prepared_sql
-
-    _, meta = _hnsw_serve(spark, sf_dir, metric="dot")
-    return spark.sql(
-        ann_hnsw_multi_prepared_sql(
-            *meta["views"], meta["entry"], _hnsw_query_lits(spark, sf_dir, _HNSW_NQ),
-            k=_HNSW_K, ef=_HNSW_EF, metric="dot", broadcast_edges=meta["bcast_edges"],
-        )
-    )
+    return _hnsw_beam(spark, sf_dir, _HNSW_NQ, metric="dot")
 
 
 @register("ann_hnsw_l2_topk", _hnsw_oracle(metric="l2"), "similarity", "pipeline")
@@ -3472,12 +3470,4 @@ def q_ann_hnsw_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``USING hnsw (embedding vector_l2_ops)`` serving route
     (``postgres.py:182-188``), fully value-oracled like the cosine twin
     (the whole build + search replays as bounded CTEs)."""
-    from vector_mcp_spark.operators.graph_ann import ann_hnsw_multi_prepared_sql
-
-    _, meta = _hnsw_serve(spark, sf_dir, metric="l2")
-    return spark.sql(
-        ann_hnsw_multi_prepared_sql(
-            *meta["views"], meta["entry"], _hnsw_query_lits(spark, sf_dir, _HNSW_NQ),
-            k=_HNSW_K, ef=_HNSW_EF, metric="l2", broadcast_edges=meta["bcast_edges"],
-        )
-    )
+    return _hnsw_beam(spark, sf_dir, _HNSW_NQ, metric="l2")
